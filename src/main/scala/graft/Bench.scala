@@ -10,6 +10,16 @@ import org.apache.spark.sql.SparkSession
   * JIT (cold-vs-warm on the heavy queries differed 6-12×).
   */
 object Bench {
+
+  /** Splits `entries`, in order, into runs whose comma-joined length is
+    * at most `budget` bytes; an entry longer than the budget rides alone. */
+  private[graft] def chunkByBytes(entries: Seq[String], budget: Int): List[List[String]] =
+    entries.foldLeft(List.empty[List[String]]) {
+      case (cur :: done, e) if cur.map(_.length + 1).sum + e.length <= budget =>
+        (e :: cur) :: done
+      case (acc, e) => List(e) :: acc
+    }.reverse.map(_.reverse)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -157,16 +167,17 @@ object Bench {
     java.nio.file.Files.writeString(java.nio.file.Paths.get("target", "bench.json"), full + "\n")
     SessionMemo.evictSession(spark)
     spark.stop()
-    val entriesPerChunk = 30 // ~25 B/entry → ~800 B/line, safely short
-    val chunks = results.grouped(entriesPerChunk).toSeq
+    // Chunks fill to a byte budget: query names run up to ~22 chars, so
+    // no fixed entry count bounds the line. 700 B of entries plus the
+    // envelope (~100 B + the sf path) stays under the ~1 KB limit.
+    val chunks = chunkByBytes(
+      results.map { case (k, v, _, _) => jkey(k) + ":" + fmt(v) }, budget = 700)
     chunks.zipWithIndex.foreach { case (grp, i) =>
-      val qj = grp.map { case (k, v, _, _) => jkey(k) + ":" + fmt(v) }
-        .mkString("{", ",", "}")
       System.out.println(
-        s"""{"metric":"queries_part","i":${i + 1},"of":${chunks.length},"cpus":$cpusJson,"queries":$qj}""")
+        s"""{"metric":"queries_part","i":${i + 1},"of":${chunks.length},"cpus":$cpusJson,"sf":$sfJson,"queries":${grp.mkString("{", ",", "}")}}""")
     }
     System.out.println(
-      s"""{"metric":"build_s","cpus":$cpusJson,"build_s":$bs}""")
+      s"""{"metric":"build_s","cpus":$cpusJson,"sf":$sfJson,"build_s":$bs}""")
     System.out.println(brief)
     System.out.flush()
   }

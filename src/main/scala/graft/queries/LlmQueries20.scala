@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFns.normalizeText
 import graft.operators.{Checkpoints, IncrementalCC, IncrementalStage, MinHashIndex}
+import graft.sinks.ReadBack
 
 /** Twentieth batch (r17): the two maintenance seams VERDICT r16 left
   * open — the probe→fold incremental-dedup composition run AS A STREAM,
@@ -138,7 +139,7 @@ object LlmQueries20 {
     }
     assign.orderBy("id").write.mode("overwrite").parquet(outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
-    s.read.parquet(outDir).orderBy("id")
+    ReadBack.parquet(s, outDir, assign.schema).orderBy("id")
   }
 
   /** Mirror a harness slice's StreamRowCap into a minhash-chain twin:
@@ -277,7 +278,7 @@ SELECT id, component FROM comp ORDER BY id
     assign.orderBy("id").write.mode("overwrite").parquet(outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
     if (removed != null) Checkpoints.release(removed)
-    s.read.parquet(outDir).orderBy("id")
+    ReadBack.parquet(s, outDir, assign.schema).orderBy("id")
   }
 
   /** Twin: q_decremental_cc's closure with the takedown slice's row cap

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFns.normalizeText
 import graft.operators.{Checkpoints, IncrementalCC, IncrementalStage, MinHashIndex}
+import graft.sinks.ReadBack
 
 /** Twenty-first batch (r18): the composed takedown stream — VERDICT r17
   * #1. q_dedup_retraction cleans the cluster ASSIGNMENT but the
@@ -156,7 +157,7 @@ object LlmQueries21 {
     assign.orderBy("id").write.mode("overwrite").parquet(outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
     Checkpoints.release(allPairs)
-    s.read.parquet(outDir).orderBy("id")
+    ReadBack.parquet(s, outDir, assign.schema).orderBy("id")
   }
 
   /** Vector takedown from the persisted IVF index (VERDICT r17 #2 —

@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.functions.TextFns.{normalizeText, tokenCount, tokens}
 import graft.functions.VectorFns.{cosineFast, toDoubleVec}
 import graft.operators.MinHashIndex
+import graft.sinks.ReadBack
 
 /** Eighth LLM-pipeline batch: hybrid-retrieval rank fusion, leakage-safe
   * group splits, and the streaming restatement of the persisted LSH
@@ -200,7 +202,9 @@ FROM base GROUP BY source, split ORDER BY source
       q.stop()
       s.conf.set(partKey, prevPart)
     }
-    s.read.parquet(outDir).orderBy("id_a", "id_b")
+    ReadBack.parquet(s, outDir,
+        StructType.fromDDL("id_a BIGINT, id_b BIGINT, jaccard DOUBLE"))
+      .orderBy("id_a", "id_b")
   }
 
   /** BM25 served from the persisted inverted index

@@ -24,6 +24,11 @@ object RelQueries11 {
 
   private def t(s: SparkSession, dir: String, name: String) = Tables(s, dir, name)
 
+  /** Skyline price-bucket width in cents. TPC-H retail prices span
+    * ~90k-210k cents at every SF, so the global bucket window holds ~3
+    * rows (pinned by GlobalWindowBoundSpec). */
+  val SkylineBucketWidth: Long = 100000L
+
   /** Pareto frontier over parts: minimize retail price, maximize size
     * ("at this price, no bigger part exists"). Two-phase bucket-pruned
     * sort-filter skyline — see [[graft.operators.Skyline]]. The DuckDB
@@ -32,7 +37,7 @@ object RelQueries11 {
   def skyline(s: SparkSession, dir: String): DataFrame = {
     val part = t(s, dir, "part")
       .withColumn("price_c", round(col("p_retailprice") * 100).cast("long"))
-    Skyline.pareto(part, "price_c", "p_size", bucketWidth = 100000L)
+    Skyline.pareto(part, "price_c", "p_size", bucketWidth = SkylineBucketWidth)
       .select(col("p_partkey"), col("price_c"), col("p_size").cast("long").as("p_size"))
       .orderBy("price_c", "p_size", "p_partkey")
   }

@@ -3,8 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.sinks.ReadBack
 import graft.streaming.StreamingIngest
 
 /** CORRECTNESS coverage for the streaming path (SURVEY §7 stretch):
@@ -76,15 +78,18 @@ object StreamQueries {
     fs.delete(new org.apache.hadoop.fs.Path(tgt + "__staged"), true)
     val in = MemoryStream[(Long, String, Double, String)]
     val df = in.toDF().toDF("ticket", "batch_tag", "price", "prio")
+    val (keys, updateCols, insertOnlyCols) =
+      (Seq("ticket"), Seq("batch_tag", "price"), Seq("prio"))
     val q = df.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
-        StreamingIngest.upsertBatch(batch, tgt, keys = Seq("ticket"),
-          updateCols = Seq("batch_tag", "price"), insertOnlyCols = Seq("prio"))
+        StreamingIngest.upsertBatch(batch, tgt, keys, updateCols, insertOnlyCols)
     }.start()
     try {
       batches.foreach { data => in.addData(data); q.processAllAvailable() }
     } finally q.stop()
-    s.read.parquet(tgt).orderBy("ticket")
+    ReadBack.parquet(s, tgt,
+      StreamingIngest.targetSchema(df.schema, keys, updateCols, insertOnlyCols))
+      .orderBy("ticket")
   }
 
   /** Closed form of the three-batch MERGE cascade: update columns take
@@ -228,6 +233,15 @@ ORDER BY "userId", "startUs"
     val partKey = "spark.sql.shuffle.partitions"
     val prevPart = s.conf.get(partKey)
     s.conf.set(partKey, "4")
+    // No watermark-only (no-data) micro-batch after each data batch:
+    // here one can neither emit nor evict. dropDuplicatesWithinWatermark
+    // emits a key the first time it sees it, so output never waits for
+    // the watermark, and with the 87600-hour delay no key expires inside
+    // the slice. The windowed, session and stream-join queries below
+    // need their trailing no-data batch to emit, so they keep it.
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevNoData = s.conf.get(noDataKey)
+    s.conf.set(noDataKey, "false")
     val in = MemoryStream[(Long, java.sql.Timestamp)]
     val q = in.toDF().toDF("dkey", "ts")
       .withWatermark("ts", "87600 hours")
@@ -240,6 +254,7 @@ ORDER BY "userId", "startUs"
     } finally {
       q.stop()
       s.conf.set(partKey, prevPart)
+      s.conf.set(noDataKey, prevNoData)
     }
     s.table("q_stream_dedup_out").orderBy("dkey")
   }
@@ -784,7 +799,7 @@ FROM kept GROUP BY 1 ORDER BY 1
     stage(2); stage(3)
     val q2 = startQuery() // fresh incarnation, same checkpoint
     try q2.processAllAvailable() finally q2.stop()
-    s.read.parquet(s"$base/out")
+    ReadBack.parquet(s, s"$base/out", schema)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         (sum(col("cents")).cast("double") / 100.0).as("total"))
@@ -1136,7 +1151,8 @@ FROM b ORDER BY grp, q
       q.stop()
       s.conf.set(partKey, prevPart)
     }
-    s.read.parquet(outDir)
+    ReadBack.parquet(s, outDir,
+        StructType.fromDDL("doc_id BIGINT, toks BIGINT, seq_id BIGINT"))
       .groupBy("seq_id")
       .agg(count(lit(1)).as("n_docs"), sum("toks").as("seq_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))

@@ -3,10 +3,12 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.functions.TextFns.bpeTokenCount
 import graft.operators.PrefixSum
+import graft.sinks.ReadBack
 
 /** Second streaming batch: the STREAMING TRAINING EXPORT — the front
   * half of q_training_export's composition (quality gate → exact
@@ -70,6 +72,8 @@ object StreamQueries2 {
     val partKey = "spark.sql.shuffle.partitions"
     val prevPart = s.conf.get(partKey)
     s.conf.set(partKey, "4")
+    val outSchema =
+      StructType.fromDDL("fp STRING, doc_id BIGINT, toks BIGINT, seq_id BIGINT")
     val carried = new java.util.concurrent.atomic.AtomicLong(0L)
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("doc_id", "text")
@@ -90,7 +94,8 @@ object StreamQueries2 {
         // pruned scan, fp-partitioned anti-join.
         val fresh =
           if (batchId == 0) gated
-          else gated.join(s.read.parquet(outDir).select("fp"), Seq("fp"), "left_anti")
+          else gated.join(ReadBack.parquet(s, outDir, outSchema).select("fp"),
+            Seq("fp"), "left_anti")
         // Stage 3: pack survivors continuing from the carried offset.
         val packed = PrefixSum.runningSum(fresh, col("doc_id"),
             Seq(col("doc_id")), col("toks"), "cum0")
@@ -109,7 +114,7 @@ object StreamQueries2 {
       q.stop()
       s.conf.set(partKey, prevPart)
     }
-    s.read.parquet(outDir)
+    ReadBack.parquet(s, outDir, outSchema)
       .groupBy("seq_id")
       .agg(count(lit(1)).as("n_docs"), sum("toks").as("seq_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
@@ -207,7 +212,8 @@ FROM c GROUP BY 1 ORDER BY 1
       q.stop()
       s.conf.set(partKey, prevPart)
     }
-    s.read.parquet(outDir)
+    ReadBack.parquet(s, outDir, StructType.fromDDL(
+        "doc_id BIGINT, toks BIGINT, seq_id BIGINT, frag_tokens BIGINT, whole BIGINT"))
       .groupBy("seq_id")
       .agg(count(lit(1)).as("n_frags"), sum("frag_tokens").as("seq_tokens"),
         sum("whole").as("n_whole_docs"), max("frag_tokens").as("max_frag"))

@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Merge
+import graft.sinks.ReadBack
 
 /** The reference's batch ingest re-expressed over Structured Streaming
   * (SURVEY §1.5/§7): the reference achieves effective exactly-once by
@@ -36,17 +38,26 @@ object StreamingIngest {
       .agg(count(lit(1)).as("n"),
         (sum(round(col(valueCol) * 100).cast("long")).cast("double") / 100.0).as("total"))
 
+  /** The schema [[upsertBatch]] writes: `keys ++ updateCols ++
+    * insertOnlyCols`, typed as in the batch. */
+  def targetSchema(batch: StructType, keys: Seq[String], updateCols: Seq[String],
+                   insertOnlyCols: Seq[String]): StructType =
+    StructType((keys ++ updateCols ++ insertOnlyCols).map(batch(_)))
+
   /** `foreachBatch` MERGE into a parquet target: read-merge-swap. The
     * swap (write aside, then replace) keeps readers consistent; a table
     * format with transactional MERGE would replace this at production
-    * scale, with identical column semantics. */
+    * scale, with identical column semantics. The current target is read
+    * with the schema this sink writes (no inference job per batch); a
+    * target with other columns or types fails with a clear error. */
   def upsertBatch(batch: DataFrame, targetDir: String, keys: Seq[String],
                   updateCols: Seq[String], insertOnlyCols: Seq[String]): Unit = {
     val spark = batch.sparkSession
     val target = java.nio.file.Paths.get(targetDir)
     val merged =
       if (java.nio.file.Files.exists(target)) {
-        val current = spark.read.parquet(targetDir)
+        val current = ReadBack.parquet(spark, targetDir,
+          targetSchema(batch.schema, keys, updateCols, insertOnlyCols))
         Merge.upsert(current, batch, keys, updateCols, insertOnlyCols)
       } else batch.select((keys ++ updateCols ++ insertOnlyCols).map(col): _*)
     val tmp = targetDir + "__staged"

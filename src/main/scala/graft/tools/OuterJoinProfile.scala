@@ -49,7 +49,7 @@ object OuterJoinProfile {
       val t0 = System.nanoTime()
       val n = fn(spark, dir).count()
       println(f"[ojprof] rep=$r wall=${(System.nanoTime() - t0) / 1e9}%.3f s rows=$n " +
-        s"load=${scala.io.Source.fromFile("/proc/loadavg").getLines().next().split(" ").head}")
+        s"load=${java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg")).split(" ").head}")
     }
     spark.stop()
   }

@@ -18,13 +18,14 @@ class GlobalWindowBoundSpec extends GraftSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("q_skyline: bucket-window frame is value-range/bucketWidth bounded") {
-    // Skyline.pareto(part, price_c, p_size, bucketWidth = 100000): the
+    // Skyline.pareto(part, price_c, p_size, SkylineBucketWidth): the
     // global window runs over one row per price BUCKET. TPC-H retail
     // prices span ~90k-210k cents at every SF (price is a per-part
     // formula, not volume-dependent), so the frame is ~3 rows.
     val part = Tables(spark, dir, "part")
       .withColumn("price_c", round(col("p_retailprice") * 100).cast("long"))
-    val nBuckets = part.select((col("price_c") / 100000L).cast("long").as("b"))
+    val width = queries.RelQueries11.SkylineBucketWidth
+    val nBuckets = part.select(floor(col("price_c") / width).as("b"))
       .distinct().count()
     assert(nBuckets <= 8, s"skyline bucket frame grew to $nBuckets rows; " +
       "the bucketWidth choice no longer bounds the global window")
@@ -32,14 +33,16 @@ class GlobalWindowBoundSpec extends GraftSuite {
 
   test("q_theil_sen: pair frame is calendar-boxed (<= 120 days -> <= 7140 pairs)") {
     // The pairwise-slope self-join is time-boxed to the LAST 120 days;
-    // the global rank window runs over at most C(120,2) = 7140 rows no
-    // matter the order volume.
-    val days = Tables(spark, dir, "orders")
-      .select(col("o_orderdate").cast("date").as("d")).distinct()
-    val mx = days.agg(max(col("d")).as("m"))
-    val boxed = days.crossJoin(broadcast(mx))
-      .filter(datediff(col("m"), col("d")) <= 119).count()
-    assert(boxed <= 120, s"theil-sen day box holds $boxed days (> 120)")
+    // the global rank window runs over the query's own pair count,
+    // which must stay within C(120,2) = 7140 no matter the order
+    // volume. sf0.01 has orders on all 120 days (n_pairs is exactly
+    // 7140 there), so widening the box or loosening the pair predicate
+    // breaks the bound.
+    val out = queries.RelQueries18.theilSen(spark, "/root/testdata/sf0.01").collect()
+    assert(out.length == 1, s"theil-sen must emit one median row, got ${out.length}")
+    val nPairs = out.head.getAs[Long]("n_pairs")
+    assert(nPairs > 0 && nPairs <= 7140,
+      s"theil-sen rank window ran over $nPairs pairs (bound 7140)")
   }
 
   test("q_hybrid_search: every ranked list is a preceding top-25") {

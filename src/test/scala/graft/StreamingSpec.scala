@@ -209,6 +209,69 @@ class StreamingSpec extends GraftSuite {
       (3L, "new", Some("fresh"))))
   }
 
+  test("foreachBatch MERGE sink: a target with other columns fails loudly, not null-filled") {
+    // The sink reads the current target with the schema it writes
+    // (keys ++ updateCols ++ insertOnlyCols); a target whose columns or
+    // types differ must throw instead of reading missing columns as NULL.
+    val batch = Seq((1L, "closed", "g")).toDF("ticket", "status", "gpt")
+    Seq(
+      Seq((1L, "open", "x")).toDF("ticket", "state", "note"),   // other names
+      Seq(("1", "open", "x")).toDF("ticket", "status", "gpt")   // other type
+    ).foreach { foreign =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_merge_foreign")
+        .resolve("target").toString
+      foreign.write.parquet(dir)
+      val e = intercept[IllegalArgumentException] {
+        StreamingIngest.upsertBatch(batch, dir, Seq("ticket"),
+          updateCols = Seq("status"), insertOnlyCols = Seq("gpt"))
+      }
+      assert(e.getMessage.contains("expected [ticket bigint, status string, gpt string]"),
+        e.getMessage)
+      assert(spark.read.parquet(dir).collect().toSeq == foreign.collect().toSeq,
+        "a rejected upsert must leave the target untouched")
+    }
+  }
+
+  test("q_stream_dedup: every micro-batch carries input rows, output equals the twin") {
+    // No watermark-only micro-batch may run: with no-data batches off,
+    // the executed batches (the ones with an addBatch phase) are
+    // exactly the two data batches.
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import graft.queries.StreamQueries
+    val dir = "/root/testdata/sf0.001"
+    val runId = new java.util.concurrent.atomic.AtomicReference[java.util.UUID]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name == "q_stream_dedup_out") runId.set(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == "q_stream_dedup_out") progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == runId.get) done.countDown()
+    }
+    spark.streams.addListener(listener)
+    val out =
+      try {
+        val rows = StreamQueries.streamDedup(spark, dir).collect().toSeq
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "no termination event for q_stream_dedup_out")
+        rows
+      } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    val batches = progress.asScala.toSeq.filter(_.durationMs.containsKey("addBatch"))
+    assert(batches.nonEmpty && batches.forall(_.numInputRows > 0),
+      s"micro-batches without input rows ran: ${batches.map(b => (b.batchId, b.numInputRows))}")
+    assert(batches.size == 2, s"expected 2 data micro-batches, ran ${batches.size}")
+    Tables(spark, dir, "events").createOrReplaceTempView("events")
+    val twin =
+      try spark.sql(StreamQueries.streamDedupSql).collect().toSeq
+      finally spark.catalog.dropTempView("events")
+    assert(out.nonEmpty && out == twin)
+  }
+
   test("stream-static join: dim broadcast in the micro-batch plan, output = batch join") {
     // The enrichment shape: unbounded fact stream × bounded static dim.
     // Asserts (a) the micro-batch physical plan actually joins the dim
