@@ -20,6 +20,31 @@ object Bench {
       case (acc, e) => List(e) :: acc
     }.reverse.map(_.reverse)
 
+  private[graft] def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  // JSON string escaping for keys: query names are [a-z0-9_], but
+  // build_s fallback keys can be raw staging keys/paths — quotes,
+  // backslashes, or control chars must not corrupt the line.
+  private[graft] def jkey(s: String): String = "\"" + s.flatMap {
+    case '"'           => "\\\""
+    case '\\'          => "\\\\"
+    case c if c < ' '  => f"\\u${c.toInt}%04x"
+    case c             => c.toString
+  } + "\""
+
+  /** The `queries_top` stdout line: the 25 slowest queries of the run,
+    * slowest first (ties by name). The driver keeps the last `queries`
+    * object it reads, so this line follows the `queries_part` chunks and
+    * the heavy queries are the ones it sees. `cpusJson` and `sfJson`
+    * come JSON-escaped, as on the other lines. */
+  private[graft] def topLine(times: Seq[(String, Double)], cpusJson: String,
+                             sfJson: String): String = {
+    val top = times.sortBy { case (k, v) => (-v, k) }.take(25)
+      .map { case (k, v) => jkey(k) + ":" + fmt(v) }
+    s"""{"metric":"queries_top","n":${top.length},"cpus":$cpusJson,"sf":$sfJson,"queries":${top.mkString("{", ",", "}")}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -94,17 +119,6 @@ object Bench {
     }
     val loadEnd = loadavg()
     errors.foreach { case (n, m) => System.err.println(s"[bench] $n FAILED: $m") }
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // JSON string escaping for keys: query names are [a-z0-9_], but
-    // build_s fallback keys can be raw staging keys/paths — quotes,
-    // backslashes, or control chars must not corrupt the line.
-    def jkey(s: String): String = "\"" + s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    } + "\""
     val qs = results.map { case (k, v, _, _) => jkey(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val loadsJson = results.map { case (k, _, la, _) => jkey(k) + ":" + fmt(la) }
@@ -176,6 +190,7 @@ object Bench {
       System.out.println(
         s"""{"metric":"queries_part","i":${i + 1},"of":${chunks.length},"cpus":$cpusJson,"sf":$sfJson,"queries":${grp.mkString("{", ",", "}")}}""")
     }
+    System.out.println(topLine(results.map { case (k, v, _, _) => k -> v }, cpusJson, sfJson))
     System.out.println(
       s"""{"metric":"build_s","cpus":$cpusJson,"sf":$sfJson,"build_s":$bs}""")
     System.out.println(brief)

@@ -8,7 +8,7 @@ import graft.functions.SketchFns
 import graft.plans.{CmsEstimate, CosineSimilarity, JaccardSimilarity}
 
 /** Session extension point: installs the engine's custom Catalyst
-  * functions at session build time —
+  * functions, planner strategy and plan rules at session build time —
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions` — so SQL-only users get
   * them without touching the Scala API. (Runtime registration for an
@@ -124,5 +124,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     e.injectPlannerStrategy(_ => new graft.plans.TopKStrategy)
     e.injectOptimizerRule(_ => graft.plans.LevenshteinLengthGuard)
+    e.injectQueryStagePrepRule(graft.plans.SmallSort(_))
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+
+import graft.sinks.ReadBack
 
 /** Loader for the engine's landed parquet tables (see TESTDATA.md).
   *
@@ -30,8 +33,7 @@ object Tables {
 
   /** Loaded-table memo. `apply` is called inside every registered query
     * — hundreds of times per suite run — and each un-memoized load pays
-    * a driver file listing, a parquet footer read, AND a full physical
-    * planning pass (the `rdd.getNumPartitions` probe below). Reusing
+    * a driver file listing and a parquet footer read. Reusing
     * the DataFrame per (session, dir, table) keeps one InMemoryFileIndex
     * and one resolved relation per table — the same listing-reuse a
     * catalog table gets from the shared session catalog. Session-keyed
@@ -88,7 +90,15 @@ object Tables {
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    // Footers are read on the driver, lazily: the first file's gives the
+    // schema (the footer schema inference reads, without inference's
+    // Spark job) and their row-group counts the fan-out decision below.
+    val path = new Path(s"$dir/$name.parquet")
+    val footers = ReadBack.partFiles(spark, path, recursive = false)
+      .map(f => f -> ReadBack.footer(spark, f)).buffered
+    val (first, firstFooter) = footers.headOption
+      .getOrElse(throw new IllegalStateException(s"$path holds no parquet data file"))
+    val df = spark.read.schema(ReadBack.footerSchema(spark, first, firstFooter)).parquet(path.toString)
     val fixed = nanosCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       // Integral `div`, not `/`: ns-epoch longs (~1.7e18) exceed double's
       // exact integer range, so float division would corrupt the low bits.
@@ -114,6 +124,15 @@ object Tables {
     // already exceeds core count and this is a no-op — it only triggers
     // for small landed files.
     //
+    // A parquet scan has at most one non-empty reader per row group, so
+    // the footers' row-group count is the guard's measure (footers are
+    // read only until the count reaches the floor). The planned split
+    // count it replaces also counted empty splits: sf0.1's lineitem, one
+    // 10 MB row group, plans as 3 splits, so at 4 to 7 cores it used to
+    // skip the fan-out and scan in one task; it fans out now. Every other
+    // landed (table, scale) decision is unchanged, and no
+    // physical-planning probe runs.
+    //
     // The fan-out hashes the table's primary key instead of round-robin
     // (r18, guide §2.5): every keyless repartition(n) first pays a local
     // sort of its input (spark.sql.execution.sortBeforeRepartition,
@@ -126,12 +145,20 @@ object Tables {
     // partitioning, which downstream joins/aggregates keyed the same way
     // reuse instead of re-exchanging.
     val target = spark.sparkContext.defaultParallelism
-    if (!dims(name) && fixed.rdd.getNumPartitions < math.max(target / 2, 1))
+    if (fansOut(name, target, footers.map(_._2.getBlocks.size)))
       fanoutKey.get(name) match {
         case Some(k) => fixed.repartition(target, col(k))
         case None    => fixed.repartition(target) // unknown table: keep round-robin
       }
     else fixed
+  }
+
+  /** The small-scan guard: a fact table whose files hold fewer than
+    * `target / 2` row groups fans out. `rowGroups` is consumed lazily,
+    * one count per file, and only until the floor is reached. */
+  private[graft] def fansOut(name: String, target: Int, rowGroups: Iterator[Int]): Boolean = {
+    val floor = math.max(target / 2, 1)
+    !dims(name) && !rowGroups.scanLeft(0)(_ + _).exists(_ >= floor)
   }
 
   /** Deterministic fan-out key per fact table: the primary (or, for

@@ -1,7 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+
+import graft.sinks.ReadBack
 
 /** Persisted MinHash-LSH near-dup index — the build-once / probe-many
   * split for CONTENT dedup, sibling of [[IvfIndex]] for embeddings: a
@@ -43,23 +47,42 @@ object MinHashIndex {
     * the format version (exactly one incompatible generation exists),
     * so the schema itself is the marker — nothing extra to write, and
     * pre-r14 directories without any marker file are still caught. */
-  private def assertBucketFormat(df: DataFrame, where: String): DataFrame = {
-    if (!df.schema.fieldNames.contains("bucket"))
+  private def assertBucketFormat(schema: StructType, where: String): Unit = {
+    if (!schema.fieldNames.contains("bucket"))
       throw new IllegalStateException(
         s"MinHash index at $where has no `bucket` column (found: " +
-          s"${df.schema.fieldNames.mkString(", ")}) — not a MinHash bucket " +
+          s"${schema.fieldNames.mkString(", ")}) — not a MinHash bucket " +
           "index (corrupt or foreign directory). Rebuild it with " +
           "MinHashIndex.build.")
-    val t = df.schema("bucket").dataType
-    if (t != org.apache.spark.sql.types.LongType)
+    val t = schema("bucket").dataType
+    if (t != LongType)
       throw new IllegalStateException(
         s"MinHash index at $where stages bucket as ${t.catalogString}, " +
           "expected BIGINT (60-bit md5-prefix buckets, engine format r14+). " +
           "This is an incompatible pre-r14 index (hex STRING buckets) — " +
           "probing or appending would silently return missing candidates. " +
           "Rebuild it with MinHashIndex.build.")
-    df
   }
+
+  /** Schema of one layer's bucket rows in the layout [[build]] writes:
+    * the data columns of one part file's footer under a `band=`
+    * directory, read on the driver, plus the `band` partition column as
+    * INT, which is what partition inference gives it. Reading with it
+    * skips the schema-inference job `spark.read.parquet` would run on
+    * every probe. The format guard runs on the footer schema. */
+  private def layerSchema(spark: SparkSession, dir: String): StructType = {
+    val part = ReadBack.partFiles(spark, new Path(s"$dir/buckets"), recursive = true)
+      .find(_.getParent.getName.startsWith("band="))
+      .getOrElse(throw new IllegalStateException(
+        s"MinHash index at $dir has no part file under buckets/band=* — " +
+          "not a MinHash bucket index. Rebuild it with MinHashIndex.build."))
+    val schema = ReadBack.footerSchema(spark, part, ReadBack.footer(spark, part))
+    assertBucketFormat(schema, dir)
+    schema.add("band", IntegerType)
+  }
+
+  private def readLayer(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(layerSchema(spark, dir)).parquet(s"$dir/buckets")
 
   /** Bucket rows, repartitioned BY BAND before the write (r14): the
     * signature pass is now a pure projection (no aggregate, no
@@ -83,7 +106,6 @@ object MinHashIndex {
     * so the union is broadcast-cheap at any corpus scale. */
   private def tombstoneUnion(spark: SparkSession,
                              dirs: Seq[String]): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
     val existing = dirs.map(d => new Path(s"$d/tombstones")).filter { p =>
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
@@ -111,7 +133,7 @@ object MinHashIndex {
               idCol: String): Unit = {
     // same loud-failure discipline as append: retracting against a
     // pre-r14 layer would "succeed" while probes keep missing pairs
-    assertBucketFormat(spark.read.parquet(s"$dir/buckets"), dir)
+    layerSchema(spark, dir)
     ids.select(col(idCol).as("id")).distinct()
       .coalesce(1)
       .write.mode("append").parquet(s"$dir/tombstones")
@@ -129,7 +151,6 @@ object MinHashIndex {
     * drop before the generation that owns them does). */
   def build(docs: DataFrame, idCol: String, textNorm: Column, dir: String,
             nHashes: Int = 16, bands: Int = 4): Unit = {
-    import org.apache.hadoop.fs.Path
     bucketRows(docs, idCol, textNorm, nHashes, bands)
       .write.mode("overwrite").partitionBy("band").parquet(s"$dir/buckets")
     val ts = new Path(s"$dir/tombstones")
@@ -143,11 +164,10 @@ object MinHashIndex {
     * one root, poisoning every later probe. */
   def append(delta: DataFrame, idCol: String, textNorm: Column, dir: String,
              nHashes: Int = 16, bands: Int = 4): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = delta.sparkSession
     val p = new Path(s"$dir/buckets")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) assertBucketFormat(spark.read.parquet(p.toString), dir)
+    if (fs.exists(p)) layerSchema(spark, dir)
     bucketRows(delta, idCol, textNorm, nHashes, bands)
       .write.mode("append").partitionBy("band").parquet(s"$dir/buckets")
   }
@@ -175,9 +195,7 @@ object MinHashIndex {
     // partition discovery (CONFLICTING_DIRECTORY_STRUCTURES — each root
     // carries its own band=N dirs); per-layer reads keep each root's
     // band-partition pruning intact and the union is by name.
-    val live = dirs
-      .map(d => assertBucketFormat(spark.read.parquet(s"$d/buckets"), d))
-      .reduce(_.unionByName(_))
+    val live = dirs.map(readLayer(spark, _)).reduce(_.unionByName(_))
     // Tombstoned docs are filtered BEFORE the bucket-width/representative
     // aggregation: a retracted doc may neither pair nor hold a bucket's
     // min-id representative slot nor count toward the mega-bucket cap —
@@ -251,11 +269,8 @@ object MinHashIndex {
     * single maintainer, no concurrent probes during the swap. */
   def compact(spark: SparkSession, baseDir: String,
               overlayDirs: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     val dirs = baseDir +: overlayDirs
-    val raw = dirs
-      .map(d => assertBucketFormat(spark.read.parquet(s"$d/buckets"), d))
-      .reduce(_.unionByName(_))
+    val raw = dirs.map(readLayer(spark, _)).reduce(_.unionByName(_))
     // Purge tombstoned rows physically during the rewrite ([[retract]]'s
     // deferred half): the compacted base then needs no tombstone filter,
     // and the tombstone files are cleared after the swap — a crash in

@@ -168,6 +168,20 @@ class MinHashIndexSpec extends GraftSuite {
     assert(probe(dir) == after, "re-appended retracted docs must stay filtered")
   }
 
+  test("probeNew reads the staged layers without a job outside its checkpoints") {
+    val docs = Tables(spark, sf, "documents")
+    val norm = normalizeText(col("text"))
+    val dir = "target/lsh_index_spec_nojob"
+    MinHashIndex.build(docs.filter(col("doc_id") < 150), "doc_id", norm, dir)
+    MinHashIndex.append(docs.filter(col("doc_id") >= 150), "doc_id", norm, dir)
+    val (_, jobs) = JobsStarted(spark) {
+      MinHashIndex.probeNew(spark, dir, docs, "doc_id", norm, threshold = 0.7, minNewId = 150L)
+    }
+    // its eager checkpoints run as SQL executions; a schema-inference
+    // job would run outside one
+    assert(jobs.nonEmpty && jobs.forall(_.sql), s"jobs: $jobs")
+  }
+
   test("pre-r14 string-bucket layers fail loudly on probe, append and compact") {
     val docs = Tables(spark, sf, "documents")
     val norm = normalizeText(col("text"))

@@ -114,11 +114,10 @@ class RegistryAnalysisSpec extends GraftSuite {
     sc.addSparkListener(listener)
     try {
       // Pre-warm the clone's Tables memo OUTSIDE any job group: the
-      // first parquet read of a path per session runs a one-task
-      // footer/schema-inference job (`parquet at Tables.scala`) that
-      // belongs to the loader, not to whichever query touches the
-      // table first — without this, the alphabetically-first toucher
-      // of each table would be flagged as eager.
+      // first load of a table per session belongs to the loader, not to
+      // whichever query touches the table first. (It reads footers on
+      // the driver and starts no job, as TablesSpec pins; the pre-warm
+      // keeps this tripwire independent of that.)
       Tables.names.foreach(t => Tables(clone, allDirs.head, t))
       val lazyQs = SparkEntry.queries.toSeq.sortBy(_._1)
         .filterNot { case (n, _) => eager(n) || n.startsWith("q_stream") }

@@ -17,3 +17,47 @@ object SparkTestBase {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 }
+
+/** Spark jobs the calling thread starts while `body` runs, in start
+  * order. The listener bus is asynchronous, so a sentinel job runs after
+  * `body`; the bus delivers events in order, so once the sentinel is
+  * seen every job of `body` has been seen too. Job groups are
+  * thread-local, so other threads' jobs are not counted. */
+object JobsStarted {
+  import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import scala.jdk.CollectionConverters._
+
+  /** `stage`: the first stage's name (a call site); `sql`: whether the
+    * job ran inside a SQL execution (an action or eager checkpoint),
+    * which driver-side jobs such as parquet schema inference do not. */
+  case class Job(stage: String, sql: Boolean)
+
+  def apply[T](spark: SparkSession)(body: => T): (T, Seq[Job]) = {
+    val sc = spark.sparkContext
+    val group = "jobs-started-" + System.nanoTime()
+    val seen = new ConcurrentLinkedQueue[Job]()
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) =>
+            seen.add(Job(j.stageInfos.sortBy(_.stageId).headOption.map(_.name).getOrElse(""),
+              props.exists(_.getProperty("spark.sql.execution.id") != null)))
+          case Some(g) if g == s"$group:end" => sentinel.countDown()
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group:end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus did not deliver the sentinel job in 60 s")
+      (result, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+}
