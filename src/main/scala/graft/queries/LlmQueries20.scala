@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.TextFns.normalizeText
 import graft.operators.{Checkpoints, IncrementalCC, IncrementalStage, MinHashIndex}
 import graft.sinks.ReadBack
+import graft.streaming.StreamingIngest
 
 /** Twentieth batch (r17): the two maintenance seams VERDICT r16 left
   * open — the probe→fold incremental-dedup composition run AS A STREAM,
@@ -115,27 +116,23 @@ object LlmQueries20 {
     // Per-batch jobs shuffle kilobyte-scale bucket/pair rows — task
     // overhead dominates at 32 partitions (the q_stream_lsh_index
     // measurement); result is partition-count independent.
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
     var assign = baseAssign
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true) // one compute: append + min
-        val (next, _) = addFoldBatch(s, docs, Seq(idxBase, overlay), overlay,
-          b, assign)
-        // release the superseded generation — never the shared staged base
-        if (assign ne baseAssign) Checkpoints.release(assign)
-        assign = next
-        Checkpoints.release(b)
-      }
-      .start()
-    try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, String)]
+      val q = in.toDF().toDF("doc_id", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.localCheckpoint(true) // one compute: append + min
+          val (next, _) = addFoldBatch(s, docs, Seq(idxBase, overlay), overlay,
+            b, assign)
+          // release the superseded generation — never the shared staged base
+          if (assign ne baseAssign) Checkpoints.release(assign)
+          assign = next
+          Checkpoints.release(b)
+        }
+        .start()
+      try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
+      finally q.stop()
     }
     assign.orderBy("id").write.mode("overwrite").parquet(outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
@@ -247,33 +244,29 @@ SELECT id, component FROM comp ORDER BY id
     // not the per-batch 4-partition one).
     var assign = IncrementalStage.decBaseAssign(s, dir)
     val baseAssign = assign
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
     var removed: DataFrame = null // accumulated takedowns (small, staged)
-    val in = MemoryStream[(Long, Long)]
-    val q = in.toDF().toDF("src", "dst")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true)
-        val current =
-          if (removed == null) IncrementalStage.decAllEdges(s, dir)
-          else IncrementalStage.decAllEdges(s, dir)
-            .join(broadcast(removed), Seq("src", "dst"), "left_anti")
-        val next = IncrementalCC.removeEdgesEager(assign, current, b)
-        if (assign ne baseAssign) Checkpoints.release(assign)
-        assign = next
-        val nextRemoved =
-          (if (removed == null) b else removed.union(b)).localCheckpoint(true)
-        if (removed != null) Checkpoints.release(removed)
-        removed = nextRemoved
-        Checkpoints.release(b)
-      }
-      .start()
-    try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, Long)]
+      val q = in.toDF().toDF("src", "dst")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.localCheckpoint(true)
+          val current =
+            if (removed == null) IncrementalStage.decAllEdges(s, dir)
+            else IncrementalStage.decAllEdges(s, dir)
+              .join(broadcast(removed), Seq("src", "dst"), "left_anti")
+          val next = IncrementalCC.removeEdgesEager(assign, current, b)
+          if (assign ne baseAssign) Checkpoints.release(assign)
+          assign = next
+          val nextRemoved =
+            (if (removed == null) b else removed.union(b)).localCheckpoint(true)
+          if (removed != null) Checkpoints.release(removed)
+          removed = nextRemoved
+          Checkpoints.release(b)
+        }
+        .start()
+      try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
+      finally q.stop()
     }
     assign.orderBy("id").write.mode("overwrite").parquet(outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)

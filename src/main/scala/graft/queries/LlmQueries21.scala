@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.TextFns.normalizeText
 import graft.operators.{Checkpoints, IncrementalCC, IncrementalStage, MinHashIndex}
 import graft.sinks.ReadBack
+import graft.streaming.StreamingIngest
 
 /** Twenty-first batch (r18): the composed takedown stream — VERDICT r17
   * #1. q_dedup_retraction cleans the cluster ASSIGNMENT but the
@@ -102,57 +103,54 @@ object LlmQueries21 {
     // Shared state resolved above; per-batch jobs shuffle kilobyte-scale
     // rows, so narrow the partitions for the stream only (the
     // q_stream_lsh_index measurement; result partition-count independent).
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
     var assign = baseAssign
     // accumulated pair set = the edge table removeEdges retracts from;
     // base era first, each fold appends its probed pairs
-    var allPairs = sharedPairs.filter(col("dst") < 400)
-      .select("src", "dst").localCheckpoint(true)
-    val in = MemoryStream[(Int, Long, String)]
-    val q = in.toDF().toDF("kind", "doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint(true)
-        if (b.filter(col("kind") === 1).isEmpty) {
-          // ADD: the shared probe→fold batch body
-          val adds = b.select(col("doc_id"), col("text"))
-          val (next, pairs) = LlmQueries20.addFoldBatch(s, docs,
-            Seq(idxBase, overlay), overlay, adds, assign)
-          if (assign ne baseAssign) Checkpoints.release(assign)
-          assign = next
-          val acc = allPairs.union(pairs).localCheckpoint(true)
-          Checkpoints.release(allPairs)
-          allPairs = acc
-        } else {
-          // TAKEDOWN: both maintained artifacts move together
-          val delIds = b.select(col("doc_id")).localCheckpoint(true)
-          MinHashIndex.retract(s, overlay, delIds, "doc_id")
-          val bySrc = delIds.withColumnRenamed("doc_id", "src")
-          val byDst = delIds.withColumnRenamed("doc_id", "dst")
-          val delPairs = allPairs
-            .join(broadcast(bySrc), Seq("src"), "left_semi").select("src", "dst")
-            .union(allPairs.join(broadcast(byDst), Seq("dst"), "left_semi")
-              .select("src", "dst"))
-          val next = IncrementalCC.removeEdgesEager(assign, allPairs, delPairs)
-          if (assign ne baseAssign) Checkpoints.release(assign)
-          assign = next
-          val survivors = allPairs
-            .join(broadcast(bySrc), Seq("src"), "left_anti")
-            .join(broadcast(byDst), Seq("dst"), "left_anti")
-            .select("src", "dst").localCheckpoint(true)
-          Checkpoints.release(allPairs)
-          allPairs = survivors
-          Checkpoints.release(delIds)
+    var allPairs: DataFrame = null
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      allPairs = sharedPairs.filter(col("dst") < 400)
+        .select("src", "dst").localCheckpoint(true)
+      val in = MemoryStream[(Int, Long, String)]
+      val q = in.toDF().toDF("kind", "doc_id", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val b = batch.localCheckpoint(true)
+          if (b.filter(col("kind") === 1).isEmpty) {
+            // ADD: the shared probe→fold batch body
+            val adds = b.select(col("doc_id"), col("text"))
+            val (next, pairs) = LlmQueries20.addFoldBatch(s, docs,
+              Seq(idxBase, overlay), overlay, adds, assign)
+            if (assign ne baseAssign) Checkpoints.release(assign)
+            assign = next
+            val acc = allPairs.union(pairs).localCheckpoint(true)
+            Checkpoints.release(allPairs)
+            allPairs = acc
+          } else {
+            // TAKEDOWN: both maintained artifacts move together
+            val delIds = b.select(col("doc_id")).localCheckpoint(true)
+            MinHashIndex.retract(s, overlay, delIds, "doc_id")
+            val bySrc = delIds.withColumnRenamed("doc_id", "src")
+            val byDst = delIds.withColumnRenamed("doc_id", "dst")
+            val delPairs = allPairs
+              .join(broadcast(bySrc), Seq("src"), "left_semi").select("src", "dst")
+              .union(allPairs.join(broadcast(byDst), Seq("dst"), "left_semi")
+                .select("src", "dst"))
+            val next = IncrementalCC.removeEdgesEager(assign, allPairs, delPairs)
+            if (assign ne baseAssign) Checkpoints.release(assign)
+            assign = next
+            val survivors = allPairs
+              .join(broadcast(bySrc), Seq("src"), "left_anti")
+              .join(broadcast(byDst), Seq("dst"), "left_anti")
+              .select("src", "dst").localCheckpoint(true)
+            Checkpoints.release(allPairs)
+            allPairs = survivors
+            Checkpoints.release(delIds)
+          }
+          Checkpoints.release(b)
         }
-        Checkpoints.release(b)
-      }
-      .start()
-    try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+        .start()
+      try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
+      finally q.stop()
     }
     assign.orderBy("id").write.mode("overwrite").parquet(outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)

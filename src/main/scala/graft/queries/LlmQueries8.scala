@@ -11,6 +11,7 @@ import graft.functions.TextFns.{normalizeText, tokenCount, tokens}
 import graft.functions.VectorFns.{cosineFast, toDoubleVec}
 import graft.operators.MinHashIndex
 import graft.sinks.ReadBack
+import graft.streaming.StreamingIngest
 
 /** Eighth LLM-pipeline batch: hybrid-retrieval rank fusion, leakage-safe
   * group splits, and the streaming restatement of the persisted LSH
@@ -180,27 +181,23 @@ FROM base GROUP BY source, split ORDER BY source
     // The per-batch append + probe jobs shuffle kilobyte-scale bucket
     // rows; at 32 partitions their cost is pure task overhead. Result
     // is partition-count independent — restore the conf after.
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true) // one compute: append + min
-        MinHashIndex.append(b, "doc_id", normalizeText(col("text")), overlay)
-        val minId = b.agg(min("doc_id")).head.getLong(0)
-        // Later ids are not yet indexed, so id_b >= minId restricts the
-        // probe to exactly this batch's new-vs-indexed pairs.
-        MinHashIndex.probeNewMulti(s, Seq(idxBase, overlay), docs, "doc_id",
-            normalizeText(col("text")), threshold = 0.7, minNewId = minId)
-          .write.mode(if (batchId == 0) "overwrite" else "append").parquet(outDir)
-      }
-      .start()
-    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, String)]
+      val q = in.toDF().toDF("doc_id", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.localCheckpoint(true) // one compute: append + min
+          MinHashIndex.append(b, "doc_id", normalizeText(col("text")), overlay)
+          val minId = b.agg(min("doc_id")).head.getLong(0)
+          // Later ids are not yet indexed, so id_b >= minId restricts the
+          // probe to exactly this batch's new-vs-indexed pairs.
+          MinHashIndex.probeNewMulti(s, Seq(idxBase, overlay), docs, "doc_id",
+              normalizeText(col("text")), threshold = 0.7, minNewId = minId)
+            .write.mode(if (batchId == 0) "overwrite" else "append").parquet(outDir)
+        }
+        .start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
     }
     ReadBack.parquet(s, outDir,
         StructType.fromDDL("id_a BIGINT, id_b BIGINT, jaccard DOUBLE"))

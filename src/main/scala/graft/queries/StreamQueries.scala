@@ -80,13 +80,15 @@ object StreamQueries {
     val df = in.toDF().toDF("ticket", "batch_tag", "price", "prio")
     val (keys, updateCols, insertOnlyCols) =
       (Seq("ticket"), Seq("batch_tag", "price"), Seq("prio"))
-    val q = df.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        StreamingIngest.upsertBatch(batch, tgt, keys, updateCols, insertOnlyCols)
-    }.start()
-    try {
-      batches.foreach { data => in.addData(data); q.processAllAvailable() }
-    } finally q.stop()
+    StreamingIngest.withStreamConfs(s) {
+      val q = df.writeStream.outputMode("append").foreachBatch {
+        (batch: DataFrame, _: Long) =>
+          StreamingIngest.upsertBatch(batch, tgt, keys, updateCols, insertOnlyCols)
+      }.start()
+      try {
+        batches.foreach { data => in.addData(data); q.processAllAvailable() }
+      } finally q.stop()
+    }
     ReadBack.parquet(s, tgt,
       StreamingIngest.targetSchema(df.schema, keys, updateCols, insertOnlyCols))
       .orderBy("ticket")
@@ -150,22 +152,14 @@ ORDER BY ticket
     // A rerun in the same session must not collide with the previous
     // run's memory-sink view.
     s.catalog.dropTempView("q_stream_sess_out")
-    // The stateful triggers' cost here is per-partition task overhead,
-    // not data: run the micro-batches on a few state partitions and
-    // restore the session conf after (result is partition-count
-    // independent).
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[Event]
-    val q = SessionizeStream.sessionize(in.toDS().withWatermark("ts", "0 seconds"))
-      .writeStream.format("memory").queryName("q_stream_sess_out")
-      .outputMode("append").start()
-    try {
-      (batches :+ sentinel).foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[Event]
+      val q = SessionizeStream.sessionize(in.toDS().withWatermark("ts", "0 seconds"))
+        .writeStream.format("memory").queryName("q_stream_sess_out")
+        .outputMode("append").start()
+      try {
+        (batches :+ sentinel).foreach { b => in.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     s.table("q_stream_sess_out")
       .select(col("userId"), col("startUs"), col("endUs"), col("nEvents"), col("durationSec"))
@@ -230,31 +224,24 @@ ORDER BY "userId", "startUs"
       rows.filter(_._2.getTime < t1),
       rows.filter(_._2.getTime >= t1)).filter(_.nonEmpty).map(_.toSeq)
     s.catalog.dropTempView("q_stream_dedup_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
     // No watermark-only (no-data) micro-batch after each data batch:
     // here one can neither emit nor evict. dropDuplicatesWithinWatermark
     // emits a key the first time it sees it, so output never waits for
     // the watermark, and with the 87600-hour delay no key expires inside
     // the slice. The windowed, session and stream-join queries below
     // need their trailing no-data batch to emit, so they keep it.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = s.conf.get(noDataKey)
-    s.conf.set(noDataKey, "false")
-    val in = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = in.toDF().toDF("dkey", "ts")
-      .withWatermark("ts", "87600 hours")
-      .dropDuplicatesWithinWatermark("dkey")
-      .select(col("dkey"), (col("dkey") * 7).as("payload"))
-      .writeStream.format("memory").queryName("q_stream_dedup_out")
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
-      s.conf.set(noDataKey, prevNoData)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      val in = MemoryStream[(Long, java.sql.Timestamp)]
+      val q = in.toDF().toDF("dkey", "ts")
+        .withWatermark("ts", "87600 hours")
+        .dropDuplicatesWithinWatermark("dkey")
+        .select(col("dkey"), (col("dkey") * 7).as("payload"))
+        .writeStream.format("memory").queryName("q_stream_dedup_out")
+        .outputMode("append").start()
+      try {
+        batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     s.table("q_stream_dedup_out").orderBy("dkey")
   }
@@ -315,39 +302,35 @@ ORDER BY dkey
         s"staging batch $i failed")
     }
     s.catalog.dropTempView("q_stream_file_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val sliceSchema = Seq.empty[(java.sql.Timestamp, Long, String)]
-      .toDF("ts", "user_id", "event_type").schema
-    val stream = s.readStream.schema(sliceSchema).parquet(inputDir)
-    val agg = stream.withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("long").as("win_start_s"),
-        col("event_type"), col("n"))
-    val q = agg.writeStream.format("memory").queryName("q_stream_file_out")
-      .outputMode("append").start()
-    try {
-      // Two chronological halves + the sentinel: the minimum batch count
-      // that still forces windows to straddle a file boundary (counts
-      // accumulating in state across discoveries) — each extra staged
-      // file costs a write job plus a listing/state micro-batch. Halves
-      // split on the ms VALUE, so equal-ms rows can't straddle a batch
-      // and watermark(0s) drops nothing.
-      val parts = Seq(
-        rows.filter(_._1.getTime < t1Ms).toSeq,
-        rows.filter(_._1.getTime >= t1Ms).toSeq).filter(_.nonEmpty)
-      parts.zipWithIndex.foreach { case (p, i) =>
-        stage(i, p.toDF("ts", "user_id", "event_type")); q.processAllAvailable()
-      }
-      val sentinel = Seq((new java.sql.Timestamp(mxMs + 48L * 3600 * 1000), -1L, "zz"))
-        .toDF("ts", "user_id", "event_type")
-      stage(2, sentinel)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val sliceSchema = Seq.empty[(java.sql.Timestamp, Long, String)]
+        .toDF("ts", "user_id", "event_type").schema
+      val stream = s.readStream.schema(sliceSchema).parquet(inputDir)
+      val agg = stream.withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").cast("long").as("win_start_s"),
+          col("event_type"), col("n"))
+      val q = agg.writeStream.format("memory").queryName("q_stream_file_out")
+        .outputMode("append").start()
+      try {
+        // Two chronological halves + the sentinel: the minimum batch count
+        // that still forces windows to straddle a file boundary (counts
+        // accumulating in state across discoveries) — each extra staged
+        // file costs a write job plus a listing/state micro-batch. Halves
+        // split on the ms VALUE, so equal-ms rows can't straddle a batch
+        // and watermark(0s) drops nothing.
+        val parts = Seq(
+          rows.filter(_._1.getTime < t1Ms).toSeq,
+          rows.filter(_._1.getTime >= t1Ms).toSeq).filter(_.nonEmpty)
+        parts.zipWithIndex.foreach { case (p, i) =>
+          stage(i, p.toDF("ts", "user_id", "event_type")); q.processAllAvailable()
+        }
+        val sentinel = Seq((new java.sql.Timestamp(mxMs + 48L * 3600 * 1000), -1L, "zz"))
+          .toDF("ts", "user_id", "event_type")
+        stage(2, sentinel)
+        q.processAllAvailable()
+      } finally q.stop()
     }
     s.table("q_stream_file_out").orderBy("win_start_s", "event_type")
   }
@@ -396,30 +379,26 @@ ORDER BY win_start_s, event_type
     def halves(rows: Array[(Long, Long)]) =
       Seq(rows.filter(_._2 < mid).toSeq, rows.filter(_._2 >= mid).toSeq)
     s.catalog.dropTempView("q_stream_join_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val lIn = MemoryStream[(Long, Long)]
-    val rIn = MemoryStream[(Long, Long)]
-    val ldf = lIn.toDF().toDF("l_k", "l_ms")
-    val rdf = rIn.toDF().toDF("r_k", "r_ms")
-    val joined = ldf.join(rdf,
-      col("l_k") === col("r_k") &&
-        col("r_ms") >= col("l_ms") && col("r_ms") <= col("l_ms") + 172800000L)
-      .select(col("l_k").as("k"), col("l_ms"), col("r_ms"))
-    val q = joined.writeStream.format("memory").queryName("q_stream_join_out")
-      .outputMode("append").start()
-    try {
-      // Two rounds, both sides fed per round: L1/R1 arrivals must match
-      // against L0/R0 rows held in buffered join state from round 0 —
-      // the cross-batch path — at half the micro-batch rounds of
-      // feeding each side separately.
-      (halves(lRows), halves(rRows)).zipped.foreach { (lb, rb) =>
-        lIn.addData(lb); rIn.addData(rb); q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val lIn = MemoryStream[(Long, Long)]
+      val rIn = MemoryStream[(Long, Long)]
+      val ldf = lIn.toDF().toDF("l_k", "l_ms")
+      val rdf = rIn.toDF().toDF("r_k", "r_ms")
+      val joined = ldf.join(rdf,
+        col("l_k") === col("r_k") &&
+          col("r_ms") >= col("l_ms") && col("r_ms") <= col("l_ms") + 172800000L)
+        .select(col("l_k").as("k"), col("l_ms"), col("r_ms"))
+      val q = joined.writeStream.format("memory").queryName("q_stream_join_out")
+        .outputMode("append").start()
+      try {
+        // Two rounds, both sides fed per round: L1/R1 arrivals must match
+        // against L0/R0 rows held in buffered join state from round 0 —
+        // the cross-batch path — at half the micro-batch rounds of
+        // feeding each side separately.
+        (halves(lRows), halves(rRows)).zipped.foreach { (lb, rb) =>
+          lIn.addData(lb); rIn.addData(rb); q.processAllAvailable()
+        }
+      } finally q.stop()
     }
     s.table("q_stream_join_out").orderBy("k", "l_ms", "r_ms")
   }
@@ -463,25 +442,21 @@ ORDER BY 1, l_ms, r_ms
     val mid = rows(rows.length / 2)._1
     val maxMs = rows.map(_._1).max
     s.catalog.dropTempView("q_stream_approx_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(Long, Long)]
-    val q = in.toDF().toDF("ms", "user_id")
-      .withColumn("ts", timestamp_millis(col("ms")))
-      .withWatermark("ts", "48 hours")
-      .groupBy(window(col("ts"), "6 hours").as("w"))
-      .agg(approx_count_distinct(col("user_id")).as("est"))
-      .select(unix_millis(col("w.start")).as("win_ms"), col("est"))
-      .writeStream.format("memory").queryName("q_stream_approx_out")
-      .outputMode("append").start()
-    try {
-      in.addData(rows.filter(_._1 < mid).toSeq); q.processAllAvailable()
-      in.addData(rows.filter(_._1 >= mid).toSeq); q.processAllAvailable()
-      in.addData(Seq((maxMs + 400L * 24 * 3600 * 1000, -1L))); q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, Long)]
+      val q = in.toDF().toDF("ms", "user_id")
+        .withColumn("ts", timestamp_millis(col("ms")))
+        .withWatermark("ts", "48 hours")
+        .groupBy(window(col("ts"), "6 hours").as("w"))
+        .agg(approx_count_distinct(col("user_id")).as("est"))
+        .select(unix_millis(col("w.start")).as("win_ms"), col("est"))
+        .writeStream.format("memory").queryName("q_stream_approx_out")
+        .outputMode("append").start()
+      try {
+        in.addData(rows.filter(_._1 < mid).toSeq); q.processAllAvailable()
+        in.addData(rows.filter(_._1 >= mid).toSeq); q.processAllAvailable()
+        in.addData(Seq((maxMs + 400L * 24 * 3600 * 1000, -1L))); q.processAllAvailable()
+      } finally q.stop()
     }
     // exact per-window distinct over the same slice; the inner join
     // also drops the sentinel's own window (absent from the batch side)
@@ -552,46 +527,42 @@ GROUP BY 1 ORDER BY 1
     def halves(rows: Array[(Long, Long)]) =
       Seq(rows.filter(_._2 < mid).toSeq, rows.filter(_._2 >= mid).toSeq)
     s.catalog.dropTempView("q_stream_outer_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val lIn = MemoryStream[(Long, Long)]
-    val rIn = MemoryStream[(Long, Long)]
-    // Narrow the join state to (key, event time) per side (r19, guide
-    // §2.3 / VERDICT r18 #3): the raw ms column is derivable from the
-    // timestamp it built — timestamp_millis(ms) carries exactly ms×1000
-    // µs, so unix_millis() after the join returns the identical long —
-    // and carrying it through the stream meant every buffered state row
-    // and both per-batch exchanges hauled a redundant 8-byte column. At
-    // 100 TB the state store IS the scale bound of a stream-stream outer
-    // join; state rows must hold join keys + needed columns only.
-    val ldf = lIn.toDF().toDF("l_k", "l_ms")
-      .select(col("l_k"), timestamp_millis(col("l_ms")).as("l_ts"))
-      .withWatermark("l_ts", "1 hour")
-    val rdf = rIn.toDF().toDF("r_k", "r_ms")
-      .select(col("r_k"), timestamp_millis(col("r_ms")).as("r_ts"))
-      .withWatermark("r_ts", "1 hour")
-    val joined = ldf.join(rdf,
-      col("l_k") === col("r_k") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr("INTERVAL 48 HOURS"),
-      "left_outer")
-      .select(col("l_k").as("k"), unix_millis(col("l_ts")).as("l_ms"),
-        coalesce(unix_millis(col("r_ts")), lit(-1L)).as("r_ms"))
-    val q = joined.writeStream.format("memory").queryName("q_stream_outer_out")
-      .outputMode("append").start()
-    try {
-      (halves(lRows), halves(rRows)).zipped.foreach { (lb, rb) =>
-        lIn.addData(lb); rIn.addData(rb); q.processAllAvailable()
-      }
-      // Sentinel a year out on BOTH sides: the global watermark is the
-      // min across inputs, so each stream must advance for eviction.
-      val far = maxMs + 365L * 24 * 3600 * 1000
-      lIn.addData(Seq((-1L, far))); rIn.addData(Seq((-1L, far)))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val lIn = MemoryStream[(Long, Long)]
+      val rIn = MemoryStream[(Long, Long)]
+      // Narrow the join state to (key, event time) per side (r19, guide
+      // §2.3 / VERDICT r18 #3): the raw ms column is derivable from the
+      // timestamp it built — timestamp_millis(ms) carries exactly ms×1000
+      // µs, so unix_millis() after the join returns the identical long —
+      // and carrying it through the stream meant every buffered state row
+      // and both per-batch exchanges hauled a redundant 8-byte column. At
+      // 100 TB the state store IS the scale bound of a stream-stream outer
+      // join; state rows must hold join keys + needed columns only.
+      val ldf = lIn.toDF().toDF("l_k", "l_ms")
+        .select(col("l_k"), timestamp_millis(col("l_ms")).as("l_ts"))
+        .withWatermark("l_ts", "1 hour")
+      val rdf = rIn.toDF().toDF("r_k", "r_ms")
+        .select(col("r_k"), timestamp_millis(col("r_ms")).as("r_ts"))
+        .withWatermark("r_ts", "1 hour")
+      val joined = ldf.join(rdf,
+        col("l_k") === col("r_k") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr("INTERVAL 48 HOURS"),
+        "left_outer")
+        .select(col("l_k").as("k"), unix_millis(col("l_ts")).as("l_ms"),
+          coalesce(unix_millis(col("r_ts")), lit(-1L)).as("r_ms"))
+      val q = joined.writeStream.format("memory").queryName("q_stream_outer_out")
+        .outputMode("append").start()
+      try {
+        (halves(lRows), halves(rRows)).zipped.foreach { (lb, rb) =>
+          lIn.addData(lb); rIn.addData(rb); q.processAllAvailable()
+        }
+        // Sentinel a year out on BOTH sides: the global watermark is the
+        // min across inputs, so each stream must advance for eviction.
+        val far = maxMs + 365L * 24 * 3600 * 1000
+        lIn.addData(Seq((-1L, far))); rIn.addData(Seq((-1L, far)))
+        q.processAllAvailable()
+      } finally q.stop()
     }
     s.table("q_stream_outer_out").filter(col("k") >= 0)
       .orderBy("k", "l_ms", "r_ms")
@@ -643,22 +614,18 @@ ORDER BY 1, l_ms, r_ms
     }
     require(rows.nonEmpty, "empty slice")
     s.catalog.dropTempView("q_stream_static_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(Long, Long, Long)]
-    val joined = enrichStream(in.toDF().toDF("ticket", "custkey", "cents"), dim)
-    val q = joined.writeStream.format("memory").queryName("q_stream_static_out")
-      .outputMode("append").start()
-    try {
-      // Two parity batches: the dim side must serve repeated
-      // micro-batches (broadcast reuse), not just one.
-      Seq(rows.filter(_._1 % 2 == 0).toSeq, rows.filter(_._1 % 2 == 1).toSeq)
-        .filter(_.nonEmpty)
-        .foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, Long, Long)]
+      val joined = enrichStream(in.toDF().toDF("ticket", "custkey", "cents"), dim)
+      val q = joined.writeStream.format("memory").queryName("q_stream_static_out")
+        .outputMode("append").start()
+      try {
+        // Two parity batches: the dim side must serve repeated
+        // micro-batches (broadcast reuse), not just one.
+        Seq(rows.filter(_._1 % 2 == 0).toSeq, rows.filter(_._1 % 2 == 1).toSeq)
+          .filter(_.nonEmpty)
+          .foreach { b => in.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     s.table("q_stream_static_out").orderBy("ticket")
   }
@@ -711,24 +678,20 @@ ORDER BY ticket
     val b1 = ids.filter(_ % 3 == 0).map(id => (id, ts(base + 2000L * (id % 300)))).toSeq
     val b2 = ids.filter(_ % 3 == 1).map(id => (id, ts(base + 2000L * (id % 300) + 1000L))).toSeq
     s.catalog.dropTempView("q_stream_late_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = in.toDF().toDF("id", "ts")
-      .withWatermark("ts", "30 seconds")
-      .groupBy(window(col("ts"), "60 seconds").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select((unix_timestamp(col("w.start")) - base / 1000L).as("win_start_s"), col("n"))
-      .writeStream.format("memory").queryName("q_stream_late_out")
-      .outputMode("append").start()
-    try {
-      in.addData(b1); q.processAllAvailable()
-      in.addData(b2); q.processAllAvailable()
-      in.addData(Seq((-1L, ts(base + 100000L * 1000L)))); q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, java.sql.Timestamp)]
+      val q = in.toDF().toDF("id", "ts")
+        .withWatermark("ts", "30 seconds")
+        .groupBy(window(col("ts"), "60 seconds").as("w"))
+        .agg(count(lit(1)).as("n"))
+        .select((unix_timestamp(col("w.start")) - base / 1000L).as("win_start_s"), col("n"))
+        .writeStream.format("memory").queryName("q_stream_late_out")
+        .outputMode("append").start()
+      try {
+        in.addData(b1); q.processAllAvailable()
+        in.addData(b2); q.processAllAvailable()
+        in.addData(Seq((-1L, ts(base + 100000L * 1000L)))); q.processAllAvailable()
+      } finally q.stop()
     }
     s.table("q_stream_late_out").filter(col("win_start_s") < 9000)
       .orderBy("win_start_s")
@@ -794,11 +757,15 @@ FROM kept GROUP BY 1 ORDER BY 1
       .option("path", s"$base/out")
       .outputMode("append").start()
     stage(0); stage(1)
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
+    StreamingIngest.withStreamConfs(s) {
+      val q1 = startQuery()
+      try q1.processAllAvailable() finally q1.stop()
+    }
     stage(2); stage(3)
-    val q2 = startQuery() // fresh incarnation, same checkpoint
-    try q2.processAllAvailable() finally q2.stop()
+    StreamingIngest.withStreamConfs(s) {
+      val q2 = startQuery() // fresh incarnation, same checkpoint
+      try q2.processAllAvailable() finally q2.stop()
+    }
     ReadBack.parquet(s, s"$base/out", schema)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -867,22 +834,18 @@ GROUP BY event_type ORDER BY event_type
     s.catalog.dropTempView("q_stream_topk_out")
     // 4 state partitions: the stateful cost is per-partition task
     // overhead, not data (result is partition-count independent).
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(Long, Long)]
-    val q = in.toDS()
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .toDF("grp", "hk", "est")
-      .writeStream.format("memory").queryName("q_stream_topk_out")
-      .outputMode("append").start()
-    try {
-      halves.foreach { b => in.addData(b.map(r => (r._1, r._2)).toSeq); q.processAllAvailable() }
-      in.addData(sentinel); q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, Long)]
+      val q = in.toDS()
+        .groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
+        .toDF("grp", "hk", "est")
+        .writeStream.format("memory").queryName("q_stream_topk_out")
+        .outputMode("append").start()
+      try {
+        halves.foreach { b => in.addData(b.map(r => (r._1, r._2)).toSeq); q.processAllAvailable() }
+        in.addData(sentinel); q.processAllAvailable()
+      } finally q.stop()
     }
     val exact = slice.groupBy("grp", "hk").agg(count(lit(1)).as("exact_cnt"))
       .withColumn("n_grp", sum("exact_cnt").over(
@@ -943,23 +906,19 @@ ORDER BY grp, hk
     val sentinel = rows.map(_._1).distinct.sorted.toSeq
       .map(u => (u, new java.sql.Timestamp(maxMs + 48L * 3600 * 1000)))
     s.catalog.dropTempView("q_stream_swin_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = in.toDF().toDF("user_id", "ts")
-      .withWatermark("ts", "0 seconds")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
-        unix_micros(col("w.end")).as("end_us"), col("n_events"))
-      .writeStream.format("memory").queryName("q_stream_swin_out")
-      .outputMode("append").start()
-    try {
-      (batches :+ sentinel).foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(Long, java.sql.Timestamp)]
+      val q = in.toDF().toDF("user_id", "ts")
+        .withWatermark("ts", "0 seconds")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
+          unix_micros(col("w.end")).as("end_us"), col("n_events"))
+        .writeStream.format("memory").queryName("q_stream_swin_out")
+        .outputMode("append").start()
+      try {
+        (batches :+ sentinel).foreach { b => in.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     s.table("q_stream_swin_out").orderBy("user_id", "start_us")
   }
@@ -1032,22 +991,18 @@ ORDER BY user_id, start_us
     val halves = rows.grouped((rows.length + 1) / 2).toSeq
     val sentinel = rows.map(_._1).distinct.sorted.map(g => (g, -1L)).toSeq
     s.catalog.dropTempView("q_stream_quant_out")
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val in = MemoryStream[(String, Long)]
-    val q = in.toDS()
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .toDF("grp", "q", "bucket_lo", "bucket_hi", "n")
-      .writeStream.format("memory").queryName("q_stream_quant_out")
-      .outputMode("append").start()
-    try {
-      halves.foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      in.addData(sentinel); q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val in = MemoryStream[(String, Long)]
+      val q = in.toDS()
+        .groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
+        .toDF("grp", "q", "bucket_lo", "bucket_hi", "n")
+        .writeStream.format("memory").queryName("q_stream_quant_out")
+        .outputMode("append").start()
+      try {
+        halves.foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        in.addData(sentinel); q.processAllAvailable()
+      } finally q.stop()
     }
     s.table("q_stream_quant_out").orderBy("grp", "q")
   }
@@ -1122,34 +1077,30 @@ FROM b ORDER BY grp, q
     val batches = Seq(
       docs.filter(_._1 < 150).toSeq,
       docs.filter(_._1 >= 150).toSeq).filter(_.nonEmpty)
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    // The packer's entire cross-batch state: tokens packed so far.
-    val carried = new java.util.concurrent.atomic.AtomicLong(0L)
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch
-          .select(col("doc_id"), bpeTokenCount(col("text")).cast("long").as("toks"))
-        val packed = PrefixSum.runningSum(toks, col("doc_id"),
-            Seq(col("doc_id")), col("toks"), "cum0")
-          .withColumn("seq_id", // exact DIV at any corpus size: long >> 10,
-            // not floor(long/long) (double-exact only below 2^53 tokens)
-            shiftright(col("cum0") + carried.get(), 10))
-          .select("doc_id", "toks", "seq_id")
-          .localCheckpoint(true) // one compute serves the write AND the fold
-        packed.write.mode(if (batchId == 0) "overwrite" else "append")
-          .parquet(outDir)
-        carried.addAndGet(packed.agg(sum("toks")).head.getLong(0))
-        ()
-      }
-      .start()
-    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      // The packer's entire cross-batch state: tokens packed so far.
+      val carried = new java.util.concurrent.atomic.AtomicLong(0L)
+      val in = MemoryStream[(Long, String)]
+      val q = in.toDF().toDF("doc_id", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val toks = batch
+            .select(col("doc_id"), bpeTokenCount(col("text")).cast("long").as("toks"))
+          val packed = PrefixSum.runningSum(toks, col("doc_id"),
+              Seq(col("doc_id")), col("toks"), "cum0")
+            .withColumn("seq_id", // exact DIV at any corpus size: long >> 10,
+              // not floor(long/long) (double-exact only below 2^53 tokens)
+              shiftright(col("cum0") + carried.get(), 10))
+            .select("doc_id", "toks", "seq_id")
+            .localCheckpoint(true) // one compute serves the write AND the fold
+          packed.write.mode(if (batchId == 0) "overwrite" else "append")
+            .parquet(outDir)
+          carried.addAndGet(packed.agg(sum("toks")).head.getLong(0))
+          ()
+        }
+        .start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
     }
     ReadBack.parquet(s, outDir,
         StructType.fromDDL("doc_id BIGINT, toks BIGINT, seq_id BIGINT"))

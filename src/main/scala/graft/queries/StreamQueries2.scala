@@ -9,6 +9,7 @@ import graft.Tables
 import graft.functions.TextFns.bpeTokenCount
 import graft.operators.PrefixSum
 import graft.sinks.ReadBack
+import graft.streaming.StreamingIngest
 
 /** Second streaming batch: the STREAMING TRAINING EXPORT — the front
   * half of q_training_export's composition (quality gate → exact
@@ -69,50 +70,46 @@ object StreamQueries2 {
       docs.filter(_._1 < 150).toSeq,
       (docs.filter(_._1 >= 150) ++ docs.filter(_._1 < 50)).toSeq
     ).filter(_.nonEmpty)
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
     val outSchema =
       StructType.fromDDL("fp STRING, doc_id BIGINT, toks BIGINT, seq_id BIGINT")
-    val carried = new java.util.concurrent.atomic.AtomicLong(0L)
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Stage 1+2 of the batch composition, per micro-batch: gate on
-        // token count, fingerprint, keep-first within the batch.
-        val gated = batch
-          .select(col("doc_id"), bpeTokenCount(col("text")).cast("long").as("toks"),
-            md5(col("text")).as("fp"))
-          .filter(col("toks") >= 5 && col("toks") <= 2000)
-          .groupBy("fp")
-          .agg(min("doc_id").as("doc_id"), min("toks").as("toks"))
-        // Cross-batch keep-first: anything whose fingerprint is already
-        // in the written output arrived earlier (ingest is id-ordered,
-        // so "already written" == "smaller doc_id") — drop it. The seen
-        // set is the output's own fp column: no driver state, column-
-        // pruned scan, fp-partitioned anti-join.
-        val fresh =
-          if (batchId == 0) gated
-          else gated.join(ReadBack.parquet(s, outDir, outSchema).select("fp"),
-            Seq("fp"), "left_anti")
-        // Stage 3: pack survivors continuing from the carried offset.
-        val packed = PrefixSum.runningSum(fresh, col("doc_id"),
-            Seq(col("doc_id")), col("toks"), "cum0")
-          .withColumn("seq_id", shiftright(col("cum0") + carried.get(), 10))
-          .select("fp", "doc_id", "toks", "seq_id")
-          .localCheckpoint(true) // one compute serves the write AND the fold
-        packed.write.mode(if (batchId == 0) "overwrite" else "append")
-          .parquet(outDir)
-        carried.addAndGet(
-          packed.agg(coalesce(sum("toks"), lit(0L))).head.getLong(0))
-        ()
-      }
-      .start()
-    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val carried = new java.util.concurrent.atomic.AtomicLong(0L)
+      val in = MemoryStream[(Long, String)]
+      val q = in.toDF().toDF("doc_id", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // Stage 1+2 of the batch composition, per micro-batch: gate on
+          // token count, fingerprint, keep-first within the batch.
+          val gated = batch
+            .select(col("doc_id"), bpeTokenCount(col("text")).cast("long").as("toks"),
+              md5(col("text")).as("fp"))
+            .filter(col("toks") >= 5 && col("toks") <= 2000)
+            .groupBy("fp")
+            .agg(min("doc_id").as("doc_id"), min("toks").as("toks"))
+          // Cross-batch keep-first: anything whose fingerprint is already
+          // in the written output arrived earlier (ingest is id-ordered,
+          // so "already written" == "smaller doc_id") — drop it. The seen
+          // set is the output's own fp column: no driver state, column-
+          // pruned scan, fp-partitioned anti-join.
+          val fresh =
+            if (batchId == 0) gated
+            else gated.join(ReadBack.parquet(s, outDir, outSchema).select("fp"),
+              Seq("fp"), "left_anti")
+          // Stage 3: pack survivors continuing from the carried offset.
+          val packed = PrefixSum.runningSum(fresh, col("doc_id"),
+              Seq(col("doc_id")), col("toks"), "cum0")
+            .withColumn("seq_id", shiftright(col("cum0") + carried.get(), 10))
+            .select("fp", "doc_id", "toks", "seq_id")
+            .localCheckpoint(true) // one compute serves the write AND the fold
+          packed.write.mode(if (batchId == 0) "overwrite" else "append")
+            .parquet(outDir)
+          carried.addAndGet(
+            packed.agg(coalesce(sum("toks"), lit(0L))).head.getLong(0))
+          ()
+        }
+        .start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
     }
     ReadBack.parquet(s, outDir, outSchema)
       .groupBy("seq_id")
@@ -172,45 +169,41 @@ FROM c GROUP BY 1 ORDER BY 1
     val batches = Seq(
       docs.filter(_._1 < 150).toSeq,
       docs.filter(_._1 >= 150).toSeq).filter(_.nonEmpty)
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevPart = s.conf.get(partKey)
-    s.conf.set(partKey, "4")
-    val carried = new java.util.concurrent.atomic.AtomicLong(0L)
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch
-          .select(col("doc_id"), bpeTokenCount(col("text")).cast("long").as("toks"))
-          .filter(col("toks") > 0)
-        val frags = PrefixSum.runningSum(toks, col("doc_id"),
-            Seq(col("doc_id")), col("toks"), "cum0")
-          .withColumn("g0", col("cum0") + carried.get())
-          .withColumn("first_seq", shiftright(col("g0"), 10))
-          .withColumn("last_seq", shiftright(col("g0") + col("toks") - 1, 10))
-          .select(col("doc_id"), col("g0"), col("toks"),
-            explode(sequence(col("first_seq"), col("last_seq"))).as("seq_id"))
-          .withColumn("frag_tokens",
-            least(col("g0") + col("toks"), (col("seq_id") + 1) * 1024L) -
-              greatest(col("g0"), col("seq_id") * 1024L))
-          .withColumn("whole",
-            when(col("frag_tokens") === col("toks"), 1L).otherwise(0L))
-          .select("doc_id", "toks", "seq_id", "frag_tokens", "whole")
-          .localCheckpoint(true) // one compute serves the write AND the fold
-        frags.write.mode(if (batchId == 0) "overwrite" else "append")
-          .parquet(outDir)
-        // Fragments partition each doc's tokens, so the batch's token
-        // mass — the offset advance — is the fragment-mass sum, read
-        // off the already-checkpointed frame.
-        carried.addAndGet(
-          frags.agg(coalesce(sum("frag_tokens"), lit(0L))).head.getLong(0))
-        ()
-      }
-      .start()
-    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    finally {
-      q.stop()
-      s.conf.set(partKey, prevPart)
+    StreamingIngest.withStreamConfs(s, StreamingIngest.FewStatePartitions) {
+      val carried = new java.util.concurrent.atomic.AtomicLong(0L)
+      val in = MemoryStream[(Long, String)]
+      val q = in.toDF().toDF("doc_id", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val toks = batch
+            .select(col("doc_id"), bpeTokenCount(col("text")).cast("long").as("toks"))
+            .filter(col("toks") > 0)
+          val frags = PrefixSum.runningSum(toks, col("doc_id"),
+              Seq(col("doc_id")), col("toks"), "cum0")
+            .withColumn("g0", col("cum0") + carried.get())
+            .withColumn("first_seq", shiftright(col("g0"), 10))
+            .withColumn("last_seq", shiftright(col("g0") + col("toks") - 1, 10))
+            .select(col("doc_id"), col("g0"), col("toks"),
+              explode(sequence(col("first_seq"), col("last_seq"))).as("seq_id"))
+            .withColumn("frag_tokens",
+              least(col("g0") + col("toks"), (col("seq_id") + 1) * 1024L) -
+                greatest(col("g0"), col("seq_id") * 1024L))
+            .withColumn("whole",
+              when(col("frag_tokens") === col("toks"), 1L).otherwise(0L))
+            .select("doc_id", "toks", "seq_id", "frag_tokens", "whole")
+            .localCheckpoint(true) // one compute serves the write AND the fold
+          frags.write.mode(if (batchId == 0) "overwrite" else "append")
+            .parquet(outDir)
+          // Fragments partition each doc's tokens, so the batch's token
+          // mass — the offset advance — is the fragment-mass sum, read
+          // off the already-checkpointed frame.
+          carried.addAndGet(
+            frags.agg(coalesce(sum("frag_tokens"), lit(0L))).head.getLong(0))
+          ()
+        }
+        .start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
     }
     ReadBack.parquet(s, outDir, StructType.fromDDL(
         "doc_id BIGINT, toks BIGINT, seq_id BIGINT, frag_tokens BIGINT, whole BIGINT"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -22,6 +22,28 @@ import graft.sinks.ReadBack
   * a streaming DataFrame is just an unbounded plan over micro-batches.
   */
 object StreamingIngest {
+
+  /** Runs `body`, which starts a stream and stops it before returning,
+    * with `confs` set on the session and the stream's checkpoint and
+    * state files written by [[LocalCheckpointFileManager]]. Afterwards
+    * each key gets its previous value back, or is unset again if it was
+    * unset, also when `body` throws. */
+  def withStreamConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val all = (LocalCheckpointFileManager.ClassKey ->
+      classOf[LocalCheckpointFileManager].getName) +: confs
+    val prev = all.map { case (k, _) => k -> s.conf.getOption(k) }
+    all.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
+  /** The state-partition count most stream composites run at: their
+    * stateful cost is per-partition task overhead, not data, and their
+    * results do not depend on the partition count. */
+  val FewStatePartitions: (String, String) = "spark.sql.shuffle.partitions" -> "4"
 
   /** Streaming composite-key dedup with bounded state. */
   def dedupStream(entries: DataFrame, eventTimeCol: String,

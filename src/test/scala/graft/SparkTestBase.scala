@@ -61,3 +61,39 @@ object JobsStarted {
     } finally sc.removeSparkListener(listener)
   }
 }
+
+/** OS processes the JVM started while `body` ran, recorded by a JFR
+  * `jdk.ProcessStart` recording: each with its command line and the
+  * class names of its stack, innermost first. The recording covers every
+  * thread, so callers filter the stacks they mean. */
+object ProcessStarts {
+  import java.nio.file.Files
+  import jdk.jfr.Recording
+  import jdk.jfr.consumer.RecordingFile
+  import scala.jdk.CollectionConverters._
+
+  case class Process(command: String, stack: Seq[String]) {
+    def hasFrame(classNamePart: String): Boolean = stack.exists(_.contains(classNamePart))
+  }
+
+  def apply[T](body: => T): (T, Seq[Process]) = {
+    val rec = new Recording()
+    val file = Files.createTempFile("process-starts", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val result = try body finally rec.stop()
+      rec.dump(file)
+      val started = RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map { e =>
+          val frames = Option(e.getStackTrace).map(_.getFrames.asScala.toSeq).getOrElse(Nil)
+          Process(e.getString("command"), frames.map(_.getMethod.getType.getName))
+        }
+      (result, started)
+    } finally {
+      rec.close()
+      Files.deleteIfExists(file)
+    }
+  }
+}

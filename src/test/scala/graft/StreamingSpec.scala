@@ -371,4 +371,60 @@ class StreamingSpec extends GraftSuite {
       }
     }
   }
+
+  test("withStreamConfs sets the manager key and the given confs, then restores or unsets each, also on a throw") {
+    import graft.streaming.LocalCheckpointFileManager
+    val managerKey = LocalCheckpointFileManager.ClassKey
+    val setKey = "spark.sql.shuffle.partitions"
+    val unsetKey = "spark.graft.test.streamConf"
+    spark.conf.unset(unsetKey)
+    val before = spark.conf.get(setKey)
+    assert(spark.conf.getOption(managerKey).isEmpty && before != "7")
+    def check(body: => Unit): Unit = {
+      try StreamingIngest.withStreamConfs(spark, setKey -> "7", unsetKey -> "on") {
+        assert(spark.conf.get(managerKey) == classOf[LocalCheckpointFileManager].getName)
+        assert(spark.conf.get(setKey) == "7" && spark.conf.get(unsetKey) == "on")
+        body
+      } finally {
+        assert(spark.conf.get(setKey) == before)
+        assert(spark.conf.getOption(unsetKey).isEmpty)
+        assert(spark.conf.getOption(managerKey).isEmpty)
+      }
+    }
+    check(())
+    val thrown = intercept[IllegalStateException](check(throw new IllegalStateException("body")))
+    assert(thrown.getMessage == "body")
+  }
+
+  test("no registered stream query starts a process to write a checkpoint file") {
+    // Every stream composite is named q_stream*; each must start at
+    // least one stream here, or the name no longer finds them. A stream
+    // started outside StreamingIngest.withStreamConfs writes its offset,
+    // commit and state files through Spark's default manager, which
+    // starts chmod and readlink processes under a CheckpointFileManager
+    // frame.
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val dir = "/root/testdata/sf0.001"
+    val streamQueries = SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.startsWith("q_stream"))
+    assert(streamQueries.size >= 20)
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try streamQueries.foreach { case (name, fn) =>
+      val before = started.get
+      val (_, processes) = ProcessStarts(fn(spark, dir))
+      // onQueryStarted is posted synchronously from start()
+      assert(started.get > before, s"$name started no stream")
+      val viaManager = processes.filter(_.hasFrame("CheckpointFileManager"))
+      viaManager.headOption.foreach { p =>
+        fail(s"$name started ${viaManager.size} processes to write checkpoint files, " +
+          s"e.g. ${p.command}:\n  ${p.stack.take(40).mkString("\n  ")}")
+      }
+    } finally spark.streams.removeListener(listener)
+  }
 }
