@@ -45,6 +45,22 @@ object Bench {
     s"""{"metric":"queries_top","n":${top.length},"cpus":$cpusJson,"sf":$sfJson,"queries":${top.mkString("{", ",", "}")}}"""
   }
 
+  /** Generated classes compiled so far in this JVM, and their total
+    * compile seconds: one count per Janino compile, none for a hit in
+    * the generated-class cache. */
+  private[graft] def codegenSoFar(): (Long, Double) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
+
+  /** The `codegen` stdout line: compiles and compile seconds over the
+    * whole run and over the timed region alone. The warmup compiles the
+    * classes the timed runs execute, so a timed compile is code the
+    * cache did not reuse, such as a stream recompiling its classes on
+    * every start. */
+  private[graft] def codegenLine(run: (Long, Double), timed: (Long, Double), cpusJson: String,
+                                 sfJson: String): String =
+    s"""{"metric":"codegen","cpus":$cpusJson,"sf":$sfJson,"compiles":${run._1},"compile_s":${fmt(run._2)},"timed_compiles":${timed._1},"timed_compile_s":${fmt(timed._2)}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -96,6 +112,7 @@ object Bench {
         .split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val loadStart = loadavg()
+    val codegenT0 = codegenSoFar()
     val benchT0 = System.nanoTime()
     val results = selected.map { case (name, fn) =>
       val qLoadBefore = loadavg()
@@ -118,6 +135,7 @@ object Bench {
       (name, times.min, qLoad, qOff)
     }
     val loadEnd = loadavg()
+    val codegenEnd = codegenSoFar()
     errors.foreach { case (n, m) => System.err.println(s"[bench] $n FAILED: $m") }
     val qs = results.map { case (k, v, _, _) => jkey(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -193,6 +211,8 @@ object Bench {
     System.out.println(topLine(results.map { case (k, v, _, _) => k -> v }, cpusJson, sfJson))
     System.out.println(
       s"""{"metric":"build_s","cpus":$cpusJson,"sf":$sfJson,"build_s":$bs}""")
+    System.out.println(codegenLine(codegenEnd,
+      (codegenEnd._1 - codegenT0._1, codegenEnd._2 - codegenT0._2), cpusJson, sfJson))
     System.out.println(brief)
     System.out.flush()
   }

@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.sinks.ParquetWrite
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,8 +27,7 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try ParquetWrite(fn(spark, sfDir).coalesce(1).write.mode("overwrite"), s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

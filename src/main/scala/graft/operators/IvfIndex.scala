@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns._
+import graft.sinks.ParquetWrite
 
 /** Persisted IVF index: the build-once / probe-many split that makes IVF
   * the 100 TB ANN play. `Knn.ivfTopK` re-derives centroids inside every
@@ -72,9 +73,9 @@ object IvfIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(s"$dir/assignments")),
       s"ivf retract: no staged index at $dir")
-    ids.select(col(idCol).as("id")).distinct()
+    ParquetWrite(ids.select(col(idCol).as("id")).distinct()
       .coalesce(1)
-      .write.mode("append").parquet(s"$dir/tombstones")
+      .write.mode("append"), s"$dir/tombstones")
   }
 
   /** Fit k-means and stage the index. `e` must carry (idCol, vecCol).
@@ -96,14 +97,14 @@ object IvfIndex {
     // grows with files from day one. At larger corpora pass the shuffle
     // through more partitions; here cid-hash into the session default
     // yields one file per cluster.
-    assigned.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/assignments")
+    ParquetWrite(assigned.repartition(col("cid"))
+      .write.mode("overwrite").partitionBy("cid"), s"$dir/assignments")
     // The staged centroids must DESCRIBE the staged clusters: recompute
     // them from the final assignment (not the raw Lloyd's output, which
     // is half a step stale relative to it) — same relationship
     // `Knn.ivfTopK` maintains when it derives centroids in-query.
-    KMeans.centroidsOf(assigned, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    ParquetWrite(KMeans.centroidsOf(assigned, vecCol)
+      .write.mode("overwrite"), s"$dir/centroids")
     // Tombstones drop only AFTER the new generation is fully staged: a
     // crash during the (expensive) Lloyd's fit or either write must not
     // leave an intact OLD index serving its retracted vectors
@@ -125,8 +126,8 @@ object IvfIndex {
   def append(spark: SparkSession, dir: String, delta: DataFrame,
              idCol: String, vecCol: String): Unit = {
     val cents = spark.read.parquet(s"$dir/centroids")
-    KMeans.assign(delta, idCol, vecCol, cents)
-      .write.mode("append").partitionBy("cid").parquet(s"$dir/assignments")
+    ParquetWrite(KMeans.assign(delta, idCol, vecCol, cents)
+      .write.mode("append").partitionBy("cid"), s"$dir/assignments")
   }
 
   /** Mean cosine-distance creep of the CURRENT assignment set against
@@ -162,9 +163,9 @@ object IvfIndex {
     // are purged physically and the tombstone files cleared after the
     // swap (a crash in between leaves stale tombstones whose rows are
     // already gone — the reader-side anti-join treats that as a no-op)
-    liveAssignments(spark, dir)
+    ParquetWrite(liveAssignments(spark, dir)
       .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(tmp)
+      .write.mode("overwrite").partitionBy("cid"), tmp)
     val p = new Path(s"$dir/assignments")
     val old = new Path(s"$dir/assignments__old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 
 /** Persisted MinHash-LSH near-dup index — the build-once / probe-many
   * split for CONTENT dedup, sibling of [[IvfIndex]] for embeddings: a
@@ -94,8 +94,8 @@ object MinHashIndex {
     * data — a handful of right-sized files per band at any scale
     * (r13 got the same effect accidentally, from the signature
     * aggregate's AQE-coalesced shuffle). */
-  private def bucketRows(docs: DataFrame, idCol: String, textNorm: Column,
-                         nHashes: Int, bands: Int): DataFrame =
+  private[graft] def bucketRows(docs: DataFrame, idCol: String, textNorm: Column,
+                                nHashes: Int, bands: Int): DataFrame =
     MinHashDedup.banded(
       MinHashDedup.signatures(docs, idCol, textNorm, nHashes = nHashes),
       idCol, nHashes, bands)
@@ -134,9 +134,9 @@ object MinHashIndex {
     // same loud-failure discipline as append: retracting against a
     // pre-r14 layer would "succeed" while probes keep missing pairs
     layerSchema(spark, dir)
-    ids.select(col(idCol).as("id")).distinct()
+    ParquetWrite(ids.select(col(idCol).as("id")).distinct()
       .coalesce(1)
-      .write.mode("append").parquet(s"$dir/tombstones")
+      .write.mode("append"), s"$dir/tombstones")
   }
 
   /** Stage the corpus bucket table at `dir` (overwrite). Resets the
@@ -151,8 +151,8 @@ object MinHashIndex {
     * drop before the generation that owns them does). */
   def build(docs: DataFrame, idCol: String, textNorm: Column, dir: String,
             nHashes: Int = 16, bands: Int = 4): Unit = {
-    bucketRows(docs, idCol, textNorm, nHashes, bands)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/buckets")
+    ParquetWrite(bucketRows(docs, idCol, textNorm, nHashes, bands)
+      .write.mode("overwrite").partitionBy("band"), s"$dir/buckets")
     val ts = new Path(s"$dir/tombstones")
     ts.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
       .delete(ts, true)
@@ -168,8 +168,8 @@ object MinHashIndex {
     val p = new Path(s"$dir/buckets")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) layerSchema(spark, dir)
-    bucketRows(delta, idCol, textNorm, nHashes, bands)
-      .write.mode("append").partitionBy("band").parquet(s"$dir/buckets")
+    ParquetWrite(bucketRows(delta, idCol, textNorm, nHashes, bands)
+      .write.mode("append").partitionBy("band"), s"$dir/buckets")
   }
 
   /** Near-dup pairs (id_a, id_b, jaccard ≥ threshold) whose LATER side
@@ -297,8 +297,8 @@ object MinHashIndex {
     // task emits up to one file per band and the rewrite can retain or
     // even grow the small-file count it exists to reduce (the same
     // discipline as IvfIndex.compact's repartition(cid)).
-    union.repartition(col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(tmp)
+    ParquetWrite(union.repartition(col("band"))
+      .write.mode("overwrite").partitionBy("band"), tmp)
     val p = new Path(s"$baseDir/buckets")
     val old = new Path(s"$baseDir/buckets__old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

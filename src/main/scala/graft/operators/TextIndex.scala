@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.ParquetWrite
+
 /** Persisted inverted text index — the lexical member of the staged-index
   * trio ([[IvfIndex]] vectors, [[MinHashIndex]] dedup): BM25 serving
   * without re-tokenizing the corpus per query.
@@ -39,13 +41,13 @@ object TextIndex {
     // reproduces that without the corpus-wide explode→shuffle.
     val dl = base.select(col("doc_id"), size(col("__toks")).cast("long").as("dl"))
       .filter(col("dl") > 0)
-    dl.write.mode("overwrite").parquet(s"$dir/doclen")
-    dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
-    base.select(col("doc_id"), explode(col("__toks")).as("tok"))
+    ParquetWrite(dl.write.mode("overwrite"), s"$dir/doclen")
+    ParquetWrite(dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
+      .write.mode("overwrite"), s"$dir/stats")
+    ParquetWrite(base.select(col("doc_id"), explode(col("__toks")).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       .withColumn("bucket", termBucket(col("tok")))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
+      .write.mode("overwrite").partitionBy("bucket"), s"$dir/postings")
   }
 
   /** BM25 top-k for one bag of query terms, served from the staged

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFns.normalizeText
 import graft.operators.{Checkpoints, IncrementalCC, IncrementalStage, MinHashIndex}
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 import graft.streaming.StreamingIngest
 
 /** Twentieth batch (r17): the two maintenance seams VERDICT r16 left
@@ -134,7 +134,7 @@ object LlmQueries20 {
       try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
       finally q.stop()
     }
-    assign.orderBy("id").write.mode("overwrite").parquet(outDir)
+    ParquetWrite(assign.orderBy("id").write.mode("overwrite"), outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
     ReadBack.parquet(s, outDir, assign.schema).orderBy("id")
   }
@@ -268,7 +268,7 @@ SELECT id, component FROM comp ORDER BY id
       try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
       finally q.stop()
     }
-    assign.orderBy("id").write.mode("overwrite").parquet(outDir)
+    ParquetWrite(assign.orderBy("id").write.mode("overwrite"), outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
     if (removed != null) Checkpoints.release(removed)
     ReadBack.parquet(s, outDir, assign.schema).orderBy("id")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFns.normalizeText
 import graft.operators.{Checkpoints, IncrementalCC, IncrementalStage, MinHashIndex}
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 import graft.streaming.StreamingIngest
 
 /** Twenty-first batch (r18): the composed takedown stream — VERDICT r17
@@ -152,7 +152,7 @@ object LlmQueries21 {
       try batches.foreach { bt => in.addData(bt); q.processAllAvailable() }
       finally q.stop()
     }
-    assign.orderBy("id").write.mode("overwrite").parquet(outDir)
+    ParquetWrite(assign.orderBy("id").write.mode("overwrite"), outDir)
     if (assign ne baseAssign) Checkpoints.release(assign)
     Checkpoints.release(allPairs)
     ReadBack.parquet(s, outDir, assign.schema).orderBy("id")

@@ -10,7 +10,7 @@ import graft.Tables
 import graft.functions.TextFns.{normalizeText, tokenCount, tokens}
 import graft.functions.VectorFns.{cosineFast, toDoubleVec}
 import graft.operators.MinHashIndex
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 import graft.streaming.StreamingIngest
 
 /** Eighth LLM-pipeline batch: hybrid-retrieval rank fusion, leakage-safe
@@ -191,9 +191,9 @@ FROM base GROUP BY source, split ORDER BY source
           val minId = b.agg(min("doc_id")).head.getLong(0)
           // Later ids are not yet indexed, so id_b >= minId restricts the
           // probe to exactly this batch's new-vs-indexed pairs.
-          MinHashIndex.probeNewMulti(s, Seq(idxBase, overlay), docs, "doc_id",
+          ParquetWrite(MinHashIndex.probeNewMulti(s, Seq(idxBase, overlay), docs, "doc_id",
               normalizeText(col("text")), threshold = 0.7, minNewId = minId)
-            .write.mode(if (batchId == 0) "overwrite" else "append").parquet(outDir)
+            .write.mode(if (batchId == 0) "overwrite" else "append"), outDir)
         }
         .start()
       try batches.foreach { b => in.addData(b); q.processAllAvailable() }

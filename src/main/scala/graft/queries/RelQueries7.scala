@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFns.{EmailPattern, PhonePattern, UrlPattern}
+import graft.sinks.ParquetWrite
 
 /** Seventh relational batch: mergeable-sketch rollups, equi-depth
   * binning, entity extraction, and run-length event collapse.
@@ -411,11 +412,11 @@ LIMIT 50
       round(col("o_totalprice") * 100).cast("long").as("cents"),
       col("o_orderstatus").as("status"))
     // generation 1: no `status` column yet
-    o.filter(col("k") % 2 === 0).select("k", "cents")
-      .write.mode("overwrite").parquet(s"$base/gen1")
+    ParquetWrite(o.filter(col("k") % 2 === 0).select("k", "cents")
+      .write.mode("overwrite"), s"$base/gen1")
     // generation 2: schema grew a column
-    o.filter(col("k") % 2 === 1).select("k", "cents", "status")
-      .write.mode("overwrite").parquet(s"$base/gen2")
+    ParquetWrite(o.filter(col("k") % 2 === 1).select("k", "cents", "status")
+      .write.mode("overwrite"), s"$base/gen2")
     s.read.option("mergeSchema", "true").parquet(s"$base/gen1", s"$base/gen2")
       // 'legacy' labels pre-evolution rows (their status reads back
       // NULL) — also sidesteps cross-engine NULL sort-order divergence.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sinks.ParquetWrite
 
 /** Eighth relational batch: time-series resampling with linear
   * interpolation, and seasonal-baseline anomaly detection.
@@ -264,13 +265,13 @@ ORDER BY user_id, start_us
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       .repartition(col("event_type"))
-    ev.write.partitionBy("event_type").mode("overwrite").parquet(base)
+    ParquetWrite(ev.write.partitionBy("event_type").mode("overwrite"), base)
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = s.conf.get(key, "STATIC")
     s.conf.set(key, "dynamic")
-    try ev.filter(col("event_type") === "click")
+    try ParquetWrite(ev.filter(col("event_type") === "click")
       .withColumn("cents", col("cents") * 2)
-      .write.partitionBy("event_type").mode("overwrite").parquet(base)
+      .write.partitionBy("event_type").mode("overwrite"), base)
     finally s.conf.set(key, prev)
     s.read.parquet(base)
       .groupBy("event_type")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 import graft.streaming.StreamingIngest
 
 /** CORRECTNESS coverage for the streaming path (SURVEY §7 stretch):
@@ -296,7 +296,7 @@ ORDER BY dkey
     // contract a production file source relies on (write-aside + move).
     def stage(i: Int, part: DataFrame): Unit = {
       val tmp = s"$base/stage_$i"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
+      ParquetWrite(part.coalesce(1).write.mode("overwrite"), tmp)
       val f = fs.globStatus(new org.apache.hadoop.fs.Path(tmp + "/part-*.parquet")).head.getPath
       require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$inputDir/batch_$i.parquet")),
         s"staging batch $i failed")
@@ -742,9 +742,9 @@ FROM kept GROUP BY 1 ORDER BY 1
     }
     def stage(k: Int): Unit = {
       val tmp = s"$base/stage_$k"
-      rowsLocal.filter(_._1 % 4 == k).toSeq
+      ParquetWrite(rowsLocal.filter(_._1 % 4 == k).toSeq
         .toDF("event_id", "event_type", "cents")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
+        .coalesce(1).write.mode("overwrite"), tmp)
       val f = fs.globStatus(new org.apache.hadoop.fs.Path(tmp + "/part-*.parquet")).head.getPath
       require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$input/batch_$k.parquet")))
     }
@@ -753,6 +753,7 @@ FROM kept GROUP BY 1 ORDER BY 1
     def startQuery() = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(input)
       .writeStream.format("parquet")
+      .options(ParquetWrite.Options) // the file sink's writes start no process either
       .option("checkpointLocation", s"$base/ckpt")
       .option("path", s"$base/out")
       .outputMode("append").start()
@@ -1093,8 +1094,7 @@ FROM b ORDER BY grp, q
               shiftright(col("cum0") + carried.get(), 10))
             .select("doc_id", "toks", "seq_id")
             .localCheckpoint(true) // one compute serves the write AND the fold
-          packed.write.mode(if (batchId == 0) "overwrite" else "append")
-            .parquet(outDir)
+          ParquetWrite(packed.write.mode(if (batchId == 0) "overwrite" else "append"), outDir)
           carried.addAndGet(packed.agg(sum("toks")).head.getLong(0))
           ()
         }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.TextFns.bpeTokenCount
 import graft.operators.PrefixSum
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 import graft.streaming.StreamingIngest
 
 /** Second streaming batch: the STREAMING TRAINING EXPORT — the front
@@ -101,8 +101,7 @@ object StreamQueries2 {
             .withColumn("seq_id", shiftright(col("cum0") + carried.get(), 10))
             .select("fp", "doc_id", "toks", "seq_id")
             .localCheckpoint(true) // one compute serves the write AND the fold
-          packed.write.mode(if (batchId == 0) "overwrite" else "append")
-            .parquet(outDir)
+          ParquetWrite(packed.write.mode(if (batchId == 0) "overwrite" else "append"), outDir)
           carried.addAndGet(
             packed.agg(coalesce(sum("toks"), lit(0L))).head.getLong(0))
           ()
@@ -192,8 +191,7 @@ FROM c GROUP BY 1 ORDER BY 1
               when(col("frag_tokens") === col("toks"), 1L).otherwise(0L))
             .select("doc_id", "toks", "seq_id", "frag_tokens", "whole")
             .localCheckpoint(true) // one compute serves the write AND the fold
-          frags.write.mode(if (batchId == 0) "overwrite" else "append")
-            .parquet(outDir)
+          ParquetWrite(frags.write.mode(if (batchId == 0) "overwrite" else "append"), outDir)
           // Fragments partition each doc's tokens, so the batch's token
           // mass — the offset advance — is the fragment-mass sum, read
           // off the already-checkpointed frame.

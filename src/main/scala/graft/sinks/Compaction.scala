@@ -49,8 +49,8 @@ object Compaction {
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val base = path.stripSuffix("/")
     val tmp = base + "__compacting"
-    spark.read.parquet(path).repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp)
+    ParquetWrite(spark.read.parquet(path).repartition(nFiles)
+      .write.mode("overwrite"), tmp)
     val p = new Path(path)
     val old = new Path(base + "__old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -18,10 +18,9 @@ object PartitionedParquet {
   /** Write with a derived partition column appended. */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCol: String, partitionExpr: org.apache.spark.sql.Column): Unit =
-    df.withColumn(partitionCol, partitionExpr)
+    ParquetWrite(df.withColumn(partitionCol, partitionExpr)
       .write.mode("overwrite")
-      .partitionBy(partitionCol)
-      .parquet(path)
+      .partitionBy(partitionCol), path)
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

@@ -27,9 +27,9 @@ object RangeSortedParquet {
     * sort with no single-task funnel: one sampled range exchange, then
     * per-partition sorts). */
   def write(df: DataFrame, path: String, keys: Seq[Column], nFiles: Int): Unit =
-    df.repartitionByRange(nFiles, keys: _*)
+    ParquetWrite(df.repartitionByRange(nFiles, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(path)
+      .write.mode("overwrite"), path)
 
   /** Per-file min/max of `key` — the clustering audit: ranges must be
     * pairwise disjoint for skipping to work. */

@@ -43,10 +43,10 @@ object ZOrderedParquet {
     * clustered write. */
   def write(df: DataFrame, path: String, xCol: String, yCol: String,
             nFiles: Int, bits: Int = 10): Unit = {
-    df.withColumn("__z", interleave(col(xCol), col(yCol), bits))
+    ParquetWrite(df.withColumn("__z", interleave(col(xCol), col(yCol), bits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .write.mode("overwrite"), path)
   }
 }

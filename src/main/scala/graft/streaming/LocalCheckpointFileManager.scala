@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+
+import graft.fs.NoForkLocalFileSystem
 
 /** A streaming `CheckpointFileManager` that writes local checkpoint and
   * state files without starting an OS process. Spark instantiates it
@@ -25,12 +23,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   * For a path on Hadoop's `LocalFileSystem` this is Spark's own
   * `FileSystemBasedCheckpointFileManager` (temp file, then rename) over a
-  * `LocalFileSystem` whose raw layer sets POSIX permissions through
-  * `java.nio` instead of `chmod`. The checksummed layer above it is
-  * unchanged, so files carry the same bytes, the same `.crc` sidecars
-  * (verified on read) and the same permissions after the umask, and an
-  * existing target without `overwriteIfPossible` still fails with
-  * `FileAlreadyExistsException`. Any other file system gets what
+  * [[NoForkLocalFileSystem]], which sets POSIX permissions through
+  * `java.nio` instead of `chmod`. Files carry the same bytes, the same
+  * `.crc` sidecars (verified on read) and the same permissions after the
+  * umask, and an existing target without `overwriteIfPossible` still
+  * fails with `FileAlreadyExistsException`. Any other file system gets what
   * `CheckpointFileManager.create` returns with the key unset (Spark's
   * default), so non-local rename atomicity is Spark's.
   */
@@ -39,7 +36,7 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
   private val delegate: CheckpointFileManager = path.getFileSystem(hadoopConf) match {
     case _: LocalFileSystem =>
-      val local = new LocalFileSystem(new LocalCheckpointFileManager.NioPermissionsRawFs)
+      val local = new NoForkLocalFileSystem
       local.setConf(hadoopConf) // as FileSystem.get does before initialize
       local.initialize(java.net.URI.create("file:///"), hadoopConf)
       new FileSystemBasedCheckpointFileManager(path, hadoopConf) {
@@ -67,26 +64,4 @@ object LocalCheckpointFileManager {
 
   /** Spark's key for the checkpoint-file manager class. */
   val ClassKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** `RawLocalFileSystem` whose `setPermission` calls
-    * `Files.setPosixFilePermissions`. A mode with the sticky bit, which
-    * `PosixFilePermission` cannot express, takes Hadoop's own path. */
-  private[streaming] final class NioPermissionsRawFs extends RawLocalFileSystem {
-    override def setPermission(p: Path, permission: FsPermission): Unit = {
-      val mode = permission.toShort.toInt
-      if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
-      else Files.setPosixFilePermissions(pathToFile(p).toPath, posix(mode))
-    }
-  }
-
-  /** The nine permission bits of `mode` as a `PosixFilePermission` set.
-    * The enum lists owner, group and others, read/write/execute each, in
-    * the order of the bits from 0400 down to 0001. */
-  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
-    val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    PosixFilePermission.values.zipWithIndex.foreach { case (p, i) =>
-      if ((mode & (0x100 >> i)) != 0) set.add(p)
-    }
-    set
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Merge
-import graft.sinks.ReadBack
+import graft.sinks.{ParquetWrite, ReadBack}
 
 /** The reference's batch ingest re-expressed over Structured Streaming
   * (SURVEY §1.5/§7): the reference achieves effective exactly-once by
@@ -24,13 +24,26 @@ import graft.sinks.ReadBack
 object StreamingIngest {
 
   /** Runs `body`, which starts a stream and stops it before returning,
-    * with `confs` set on the session and the stream's checkpoint and
-    * state files written by [[LocalCheckpointFileManager]]. Afterwards
-    * each key gets its previous value back, or is unset again if it was
-    * unset, also when `body` throws. */
+    * with `confs` set on the session, the stream's checkpoint and state
+    * files written by [[LocalCheckpointFileManager]], and the stream's
+    * tasks sharing compiled code across stream starts. Afterwards each
+    * key gets its previous value back, or is unset again if it was
+    * unset, also when `body` throws.
+    *
+    * Compiled code: every `start()` runs the stream on a clone of the
+    * session with a new session UUID. With artifact isolation on (Spark's
+    * default), executors give each UUID its own class loader, and the
+    * generated-class cache is keyed by class loader, so each start
+    * recompiled every task-side class of the stream. The clone copies
+    * [[ArtifactIsolationKey]] with the rest of the conf when it is
+    * created, so off here means its tasks use the executor's shared
+    * loader and hit the cache. The
+    * engine adds no artifacts to any session, so no class becomes
+    * visible that was not visible before. */
   def withStreamConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
-    val all = (LocalCheckpointFileManager.ClassKey ->
-      classOf[LocalCheckpointFileManager].getName) +: confs
+    val all = Seq(
+      LocalCheckpointFileManager.ClassKey -> classOf[LocalCheckpointFileManager].getName,
+      ArtifactIsolationKey -> "false") ++ confs
     val prev = all.map { case (k, _) => k -> s.conf.getOption(k) }
     all.foreach { case (k, v) => s.conf.set(k, v) }
     try body
@@ -39,6 +52,9 @@ object StreamingIngest {
       case (k, None)    => s.conf.unset(k)
     }
   }
+
+  /** Spark's key for per-session artifact class loaders. */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
 
   /** The state-partition count most stream composites run at: their
     * stateful cost is per-partition task overhead, not data, and their
@@ -83,7 +99,7 @@ object StreamingIngest {
         Merge.upsert(current, batch, keys, updateCols, insertOnlyCols)
       } else batch.select((keys ++ updateCols ++ insertOnlyCols).map(col): _*)
     val tmp = targetDir + "__staged"
-    merged.write.mode("overwrite").parquet(tmp)
+    ParquetWrite(merged.write.mode("overwrite"), tmp)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val dst = new org.apache.hadoop.fs.Path(targetDir)

@@ -38,4 +38,13 @@ class BenchSpec extends AnyFunSuite {
       Bench.jkey("/data/graft/testdata/sf0.1"))
     assert(worst.length < 1000, s"${worst.length} bytes")
   }
+
+  test("codegen line: run and timed-region compile counts and seconds") {
+    val line = Bench.codegenLine((412L, 9.87654), (3L, 0.0421), "\"4\"", Bench.jkey("/data/sf0.1"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("metric").asText == "codegen")
+    assert(json.get("cpus").asText == "4" && json.get("sf").asText == "/data/sf0.1")
+    assert(json.get("compiles").asLong == 412 && json.get("compile_s").asDouble == 9.877)
+    assert(json.get("timed_compiles").asLong == 3 && json.get("timed_compile_s").asDouble == 0.042)
+  }
 }

@@ -264,4 +264,34 @@ class PlanGovernanceSpec extends GraftSuite {
           offending.headOption.fold("")(_.toString.take(200)))
     }
   }
+
+  test("every parquet write in src/main outside tools/ goes through sinks.ParquetWrite") {
+    // A write that bypasses the helper resolves `file:` paths through
+    // the JVM-cached LocalFileSystem, which forks a chmod per committer
+    // directory, part file, .crc sidecar and _SUCCESS (BENCHLOG "stream
+    // codegen recompiles and write forks"). Source level: a `.parquet(`
+    // call belongs to the nearest `write`, `read`, `readStream` or
+    // `ReadBack` before it, and a `write` one is a bypass.
+    import scala.jdk.CollectionConverters._
+    val owner = "\\b(write|read|readStream|ReadBack)\\b".r
+    def rawWrites(src: String): Seq[Int] = {
+      val owners = owner.findAllMatchIn(src).map(m => m.start -> m.group(1)).toVector
+      "\\.parquet\\(".r.findAllMatchIn(src).map(_.start).filter { at =>
+        owners.takeWhile(_._1 < at).lastOption.exists(_._2 == "write")
+      }.map(at => src.substring(0, at).count(_ == '\n') + 1).toSeq
+    }
+    // the check sees a bypass and lets the helper and reads through
+    assert(rawWrites("df.write.mode(\"overwrite\")\n  .partitionBy(\"b\").parquet(p)") == Seq(2))
+    assert(rawWrites("ParquetWrite(df.write.mode(\"append\"), p)\n" +
+      "spark.read.schema(st).parquet(p)\nReadBack.parquet(s, p, st)").isEmpty)
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    val sources = java.nio.file.Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => p.toString.contains("/tools/") || p.endsWith("sinks/ParquetWrite.scala"))
+    assert(sources.size > 100, s"found ${sources.size} sources under ${root.toAbsolutePath}")
+    val bypasses = sources.flatMap { p =>
+      rawWrites(java.nio.file.Files.readString(p)).map(line => s"${root.relativize(p)}:$line")
+    }
+    assert(bypasses.isEmpty, s"parquet writes that bypass sinks.ParquetWrite: ${bypasses.mkString(", ")}")
+  }
 }

@@ -11,6 +11,9 @@ object SparkTestBase {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // as in Bench and the benchmark harness: the default (100 classes)
+    // is smaller than one call of the larger stream composites needs
+    .config("spark.sql.codegen.cache.maxEntries", "5000")
     .getOrCreate()
 }
 
@@ -95,5 +98,20 @@ object ProcessStarts {
       rec.close()
       Files.deleteIfExists(file)
     }
+  }
+}
+
+/** Generated classes Spark compiled while `body` ran: the count delta of
+  * the JVM-wide compile-time histogram, which takes one sample per
+  * Janino compile and none for a hit in the generated-class cache. In
+  * local mode query planning and the tasks share the JVM, so compiles
+  * on both sides count. Run nothing else concurrently. */
+object CodegenCompiles {
+  import org.apache.spark.metrics.source.CodegenMetrics
+
+  def apply[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val result = body
+    (result, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 }
