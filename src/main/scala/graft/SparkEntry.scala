@@ -30,7 +30,8 @@ object SparkEntry {
       ScaleQueries.defs ++ SqlQueries.defs ++ StreamQueries.defs ++ StreamQueries2.defs
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys → weaker rows-only check. */
+    * the same parquet tables. Every query has one: PlanGovernanceSpec
+    * fails on a query without an oracle or an oracle without a query. */
   def oracleSql: Map[String, String] =
     RefQueries.oracles ++ RelQueries.oracles ++ RelQueries2.oracles ++
       RelQueries3.oracles ++ RelQueries4.oracles ++ RelQueries5.oracles ++

@@ -78,9 +78,6 @@ object TextFns {
   def punctRatio(c: Column): Column =
     regexp_count(c, lit("[^\\w\\s]")).cast("double") / greatest(length(c), lit(1)).cast("double")
 
-  def upperRatio(c: Column): Column =
-    regexp_count(c, lit("[A-Z]")).cast("double") / greatest(length(c), lit(1)).cast("double")
-
   def stopwordRatio(c: Column): Column =
     stopwordScore(c, StopwordPatterns.toMap.apply("en")).cast("double") /
       greatest(tokenCount(c), lit(1)).cast("double")

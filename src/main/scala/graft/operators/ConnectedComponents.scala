@@ -30,12 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Dev-only per-round trace (GRAFT_CC_DEBUG=1): round count and
-    * large/small-star split — the convergence diagnostics the r15
-    * hammingClusters profiling needed. Costs one extra count per round
-    * when on; completely inert otherwise. */
-  private val debug = sys.env.contains("GRAFT_CC_DEBUG")
-
   /** (id, component) for every node appearing in `edges`, where
     * `component` is the minimum node id reachable from it. Node ids may
     * be any orderable type (long, string). Self-loops are dropped.
@@ -88,22 +82,13 @@ object ConnectedComponents {
       // three consumers share one persisted RDD — WITHOUT the eager
       // variant's extra materialization job per round: the blocks
       // materialize inside the convergence check's action below
-      // (CcAb interleaved: lazy 2.28 vs eager 2.36 s min). The edge
-      // frame is O(|edges|) rows of two ids, so the blocks are cheap
-      // at any scale and strictly cheaper than two recomputes.
-      val t0 = if (debug) System.nanoTime() else 0L
+      // (interleaved A/B: lazy 2.28 vs eager 2.36 s min, BENCHLOG "the
+      // r16 lazy-checkpoint sweep"). The edge frame is O(|edges|) rows
+      // of two ids, so the blocks are cheap at any scale and strictly
+      // cheaper than two recomputes.
       val ls = largeStar(e).localCheckpoint(false)
-      val t1 = if (debug) System.nanoTime() else 0L
       val next = smallStar(ls).localCheckpoint(false)
       converged = isMinStar(next) // materializes next AND ls; both releasable
-      if (debug) {
-        val t2 = System.nanoTime()
-        // ls is lazy (r16): plan-building only in the first split; the
-        // whole round's compute lands in the check's single action
-        println(f"[cc] round $iter: largeStar-plan ${(t1 - t0) / 1e9}%.2f s, " +
-          f"round-job ${(t2 - t1) / 1e9}%.2f s, " +
-          s"edges=${next.count()} parts=${next.rdd.getNumPartitions}")
-      }
       Checkpoints.release(ls)
       if (prev != null) Checkpoints.release(prev)
       prev = e

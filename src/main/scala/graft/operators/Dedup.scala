@@ -45,13 +45,4 @@ object Dedup {
     * survives. */
   def exact(df: DataFrame, keys: Seq[String]): DataFrame =
     df.dropDuplicates(keys)
-
-  /** Content-hash dedup for wide rows: group on a digest of the listed
-    * columns instead of shuffling the full row. At 100 TB prefer sha2-256
-    * over md5 for collision headroom (birthday bound). */
-  def byContentHash(df: DataFrame, cols: Seq[String], order: Seq[Column],
-                    hash: Seq[Column] => Column = cs => sha2(concat_ws("|", cs: _*), 256)): DataFrame = {
-    val keyed = df.withColumn("__ck", hash(cols.map(col)))
-    keepFirst(keyed, Seq("__ck"), order).drop("__ck")
-  }
 }

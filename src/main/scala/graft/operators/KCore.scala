@@ -26,11 +26,12 @@ import org.apache.spark.sql.functions._
   * so without staging every round computed the degree count twice —
   * but the r15 EAGER stage bought that single computation with an
   * extra materialization job per round, measured ~15% on the whole
-  * operator at sf0.1 (KCoreAb three-way, r16: unstaged 1.64 s, eager
+  * operator at sf0.1 (three-way A/B, r16: unstaged 1.64 s, eager
   * 1.95 s, lazy 1.73 s — the r15 "A/B-neutral" claim did not survive
-  * more reps). Lazy gets both: the two consumers reference ONE
-  * persisted RDD whose blocks materialize inside the round's single
-  * eager e-job, computing the aggregate once with no extra barrier.
+  * more reps; BENCHLOG "q_kcore RESOLVED"). Lazy gets both: the two
+  * consumers reference ONE persisted RDD whose blocks materialize
+  * inside the round's single eager e-job, computing the aggregate once
+  * with no extra barrier.
   * Lineage is cut per round with an eager localCheckpoint on e (house
   * pattern of [[ConnectedComponents]] / [[LabelProp]] /
   * [[PageRank]]) so the plan stays round-sized. `rounds` is the unroll

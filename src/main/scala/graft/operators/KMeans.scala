@@ -86,7 +86,7 @@ object KMeans {
     // NOT collapse into one final job. What lazy buys is skipping the
     // SEPARATE materialization job an eager checkpoint adds per round
     // (iters extra jobs), while keeping lineage round-sized
-    // (see PageRank.ranks / tools/PrAb)
+    // (see PageRank.ranks)
     val rounds = collection.mutable.ArrayBuffer[DataFrame]()
     for (i <- 1 to iters) {
       cents = centroidsOf(assign(corpus, idCol, vecCol, cents), vecCol)

@@ -44,7 +44,7 @@ object LabelProp {
     // lazy rounds + one eager final materialization (r16): no per-round
     // driver action exists, so eager-per-round checkpoints were N
     // standalone jobs whose only purpose — lineage truncation — the
-    // lazy form provides too (see PageRank.ranks / tools/PrAb)
+    // lazy form provides too (see PageRank.ranks)
     val rounds = collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
     for (i <- 0 until iters) {
       labels = e

@@ -49,8 +49,9 @@ object PageRank {
     // an eager checkpoint per iteration is a standalone job whose only
     // purpose — lineage truncation — the lazy form provides too. The
     // final EAGER checkpoint materializes the whole pipelined loop in
-    // ONE job (PrAb interleaved: 1.30 vs 1.37 s min), after which every
-    // intermediate round's blocks are releasable deterministically.
+    // ONE job (interleaved A/B: 1.30 vs 1.37 s min, BENCHLOG "the r16
+    // lazy-checkpoint sweep"), after which every intermediate round's
+    // blocks are releasable deterministically.
     val rounds = collection.mutable.ArrayBuffer[DataFrame]()
     for (i <- 0 until iters) {
       val m = e.join(r.withColumnRenamed("id", "src"), "src")

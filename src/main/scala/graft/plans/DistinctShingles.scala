@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * composed spelling runs interpreted (higher-order lambda dispatch
   * per element, then a second interpreted `array_distinct` pass) and
   * was the dominant cost of the whole near-dup plan at the 100× tier
-  * (~16 s for the corpus, measured by `graft.tools.Profile`); this is
-  * one static call inside whole-stage codegen.
+  * (~16 s for the corpus, BENCHLOG "q_minhash_neardup verification
+  * stack"); this is one static call inside whole-stage codegen.
   *
   * Exact semantics match (DistinctShinglesSpec pins them on the corpus
   * plus adversarial cases): shingle count = max(len−k+1, 1) so a

@@ -23,6 +23,8 @@ object Explain {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the plans Verify and the benchmark harness execute (plans/SmallSort)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

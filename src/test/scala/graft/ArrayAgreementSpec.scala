@@ -66,41 +66,29 @@ class ArrayAgreementSpec extends GraftSuite {
   }
 
   test("SQL registration, type check, and sub-arity analysis errors") {
-    val base = SparkTestBase.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val n = s2.sql(
-        "SELECT array_agreement(array(CAST(5 AS BIGINT), CAST(7 AS BIGINT))," +
-          " array(CAST(5 AS BIGINT), CAST(8 AS BIGINT))) AS n")
-        .collect()(0).getInt(0)
-      assert(n == 1)
-      // wrong element type is an analysis-time type check, not a crash
-      val eType = intercept[org.apache.spark.sql.AnalysisException] {
-        s2.sql("SELECT array_agreement(array('x'), array('x'))").collect()
-      }
-      assert(eType.getMessage.contains("array<bigint>"))
-      // sub-arity calls raise WRONG_NUM_ARGS, never IndexOutOfBounds
-      // (ADVICE r14 named minhash_signature; the guard covers every
-      // injected function)
-      for (q <- Seq(
-          "SELECT array_agreement(array(CAST(1 AS BIGINT)))",
-          "SELECT minhash_signature('abc')",
-          "SELECT minhash_signature('abc', 9)",
-          "SELECT md5_prefix_long('abc')",
-          "SELECT cosine_sim(array(1.0))")) {
-        val e = intercept[org.apache.spark.sql.AnalysisException] { s2.sql(q).collect() }
-        assert(e.getCondition != null && e.getCondition.startsWith("WRONG_NUM_ARGS"),
-          s"$q: got ${e.getCondition}: ${e.getMessage}")
-      }
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    val s2 = SparkTestBase.withExtensions
+    val n = s2.sql(
+      "SELECT array_agreement(array(CAST(5 AS BIGINT), CAST(7 AS BIGINT))," +
+        " array(CAST(5 AS BIGINT), CAST(8 AS BIGINT))) AS n")
+      .collect()(0).getInt(0)
+    assert(n == 1)
+    // wrong element type is an analysis-time type check, not a crash
+    val eType = intercept[org.apache.spark.sql.AnalysisException] {
+      s2.sql("SELECT array_agreement(array('x'), array('x'))").collect()
+    }
+    assert(eType.getMessage.contains("array<bigint>"))
+    // sub-arity calls raise WRONG_NUM_ARGS, never IndexOutOfBounds
+    // (ADVICE r14 named minhash_signature; the guard covers every
+    // injected function)
+    for (q <- Seq(
+        "SELECT array_agreement(array(CAST(1 AS BIGINT)))",
+        "SELECT minhash_signature('abc')",
+        "SELECT minhash_signature('abc', 9)",
+        "SELECT md5_prefix_long('abc')",
+        "SELECT cosine_sim(array(1.0))")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] { s2.sql(q).collect() }
+      assert(e.getCondition != null && e.getCondition.startsWith("WRONG_NUM_ARGS"),
+        s"$q: got ${e.getCondition}: ${e.getMessage}")
     }
   }
 }

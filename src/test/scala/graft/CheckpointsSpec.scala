@@ -14,41 +14,34 @@ import graft.operators.Checkpoints
   * checkpointed consumers cannot recompute it (truncated lineage). */
 class CheckpointsSpec extends GraftSuite {
 
-  private def pinned(): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
   test("Dataset.unpersist is a no-op on a localCheckpoint frame (why Checkpoints exists)") {
-    val base = pinned()
+    val base = Pins(spark)
     val df = spark.range(1000).toDF("v").localCheckpoint(true)
-    assert((pinned() -- base).size == 1, "checkpoint should pin exactly one RDD")
+    assert((Pins(spark) -- base).size == 1, "checkpoint should pin exactly one RDD")
     df.unpersist(blocking = true)
-    assert((pinned() -- base).size == 1,
+    assert((Pins(spark) -- base).size == 1,
       "Dataset.unpersist released a checkpoint pin — Spark fixed the " +
         "CacheManager gap; Checkpoints.release can be retired")
     Checkpoints.release(df) // cleanup
   }
 
   test("release frees a checkpoint root's blocks") {
-    val base = pinned()
+    val base = Pins(spark)
     val df = spark.range(1000).toDF("v").localCheckpoint(true)
-    assert((pinned() -- base).nonEmpty)
+    assert((Pins(spark) -- base).nonEmpty)
     Checkpoints.release(df)
-    // release is non-blocking; poll briefly for the async removal
-    val deadline = System.nanoTime() + 10000000000L
-    while ((pinned() -- base).nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert((pinned() -- base).isEmpty, "release left the checkpoint pinned")
+    assert(Pins.leftAfterRelease(spark, base).isEmpty, "release left the checkpoint pinned")
   }
 
   test("release is root-strict: a derived frame does not free its upstream checkpoint") {
-    val base = pinned()
+    val base = Pins(spark)
     val ckpt = spark.range(1000).toDF("v").localCheckpoint(true)
-    val newPins = pinned() -- base
+    val newPins = Pins(spark) -- base
     assert(newPins.nonEmpty)
     val derived = ckpt.filter("v % 2 = 0").groupBy().count()
     Checkpoints.release(derived) // must no-op
     Thread.sleep(200)
-    assert((pinned() -- base) == newPins,
+    assert((Pins(spark) -- base) == newPins,
       "releasing a derived frame freed the upstream checkpoint")
     assert(derived.collect().head.getLong(0) == 500L)
     Checkpoints.release(ckpt)

@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.ConnectedComponents
+import org.apache.spark.sql.functions.col
+
+import graft.operators.{Checkpoints, ConnectedComponents}
 
 class ConnectedComponentsSpec extends GraftSuite {
   import spark.implicits._
@@ -47,5 +49,20 @@ class ConnectedComponentsSpec extends GraftSuite {
       Seq(("docB", "docA"), ("docB", "docC")).toDF("src", "dst"))
       .as[(String, String)].collect().toMap
     assert(m == Map("docA" -> "docA", "docB" -> "docA", "docC" -> "docA"))
+  }
+
+  test("componentsEager pins blocks only until its result is released") {
+    // the q_incremental_cc graph shape
+    val edges = Tables(spark, "/root/testdata/sf0.001", "lineitem")
+      .filter(col("l_orderkey") < 8000)
+      .select((col("l_orderkey") % 2000).as("src"), (col("l_partkey") % 2000).as("dst"))
+    val before = Pins(spark)
+    val staged = ConnectedComponents.componentsEager(edges)
+    assert(staged.count() > 0)
+    val held = Pins(spark) -- before
+    assert(held.nonEmpty, "the staged result must hold its own blocks")
+    Checkpoints.release(staged)
+    val leaked = Pins.leftAfterRelease(spark, before)
+    assert(leaked.isEmpty, s"rdd ids still pinned after release: $leaked (held: $held)")
   }
 }

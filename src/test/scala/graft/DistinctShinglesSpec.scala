@@ -70,21 +70,9 @@ class DistinctShinglesSpec extends GraftSuite {
   }
 
   test("SQL registration via GraftExtensions") {
-    val base = SparkTestBase.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val got = s2.sql("SELECT distinct_shingles('abcdefghij', 9) AS sh")
-        .collect()(0).getSeq[String](0)
-      assert(got == Seq("abcdefghi", "bcdefghij"))
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-    }
+    val s2 = SparkTestBase.withExtensions
+    val got = s2.sql("SELECT distinct_shingles('abcdefghij', 9) AS sh")
+      .collect()(0).getSeq[String](0)
+    assert(got == Seq("abcdefghi", "bcdefghij"))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TopKAggregate._
@@ -8,30 +7,18 @@ import graft.operators.TopKAggregate._
 class ExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions installs cosine_sim at session build time") {
-    val base = SparkTestBase.spark // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val r = s2.sql(
-        "SELECT cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) AS c")
-        .collect()(0).getDouble(0)
-      assert(math.abs(r - 1.0) < 1e-12)
-      // md5_prefix_long must decode exactly what the composed SQL
-      // spelling does (hexChars as a required int literal).
-      val m = s2.sql(
-        "SELECT md5_prefix_long('abc', 13) AS v, " +
-          "CAST(conv(substring(md5('abc'), 1, 13), 16, 10) AS BIGINT) AS w")
-        .collect()(0)
-      assert(m.getLong(0) == m.getLong(1))
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    val s2 = SparkTestBase.withExtensions
+    val r = s2.sql(
+      "SELECT cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) AS c")
+      .collect()(0).getDouble(0)
+    assert(math.abs(r - 1.0) < 1e-12)
+    // md5_prefix_long must decode exactly what the composed SQL
+    // spelling does (hexChars as a required int literal).
+    val m = s2.sql(
+      "SELECT md5_prefix_long('abc', 13) AS v, " +
+        "CAST(conv(substring(md5('abc'), 1, 13), 16, 10) AS BIGINT) AS w")
+      .collect()(0)
+    assert(m.getLong(0) == m.getLong(1))
   }
 
   test("TopKByValue heap semantics: bounded, ordered, deterministic ties") {

@@ -82,31 +82,19 @@ class MinHashSignatureSpec extends GraftSuite {
   }
 
   test("SQL registration via GraftExtensions") {
-    val base = SparkTestBase.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val got = s2.sql("SELECT minhash_signature('abcdefghij', 9, 4) AS sig")
-        .collect()(0).getSeq[Long](0)
-      val params = MinHashDedup.hashParams(4)
-      val xs = Seq("abcdefghi", "bcdefghij").map { sh =>
-        val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(sh.getBytes("UTF-8")).take(4)
-          .map(b => f"${b & 0xff}%02x").mkString
-        java.lang.Long.parseLong(hex, 16) % MinHashDedup.P
-      }
-      val expected = params.map { case (a, b) =>
-        xs.map(x => (x * a + b) % MinHashDedup.P).min
-      }
-      assert(got == expected)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    val s2 = SparkTestBase.withExtensions
+    val got = s2.sql("SELECT minhash_signature('abcdefghij', 9, 4) AS sig")
+      .collect()(0).getSeq[Long](0)
+    val params = MinHashDedup.hashParams(4)
+    val xs = Seq("abcdefghi", "bcdefghij").map { sh =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(sh.getBytes("UTF-8")).take(4)
+        .map(b => f"${b & 0xff}%02x").mkString
+      java.lang.Long.parseLong(hex, 16) % MinHashDedup.P
     }
+    val expected = params.map { case (a, b) =>
+      xs.map(x => (x * a + b) % MinHashDedup.P).min
+    }
+    assert(got == expected)
   }
 }

@@ -65,9 +65,4 @@ class PipelineSpec extends GraftSuite {
     val empty = counts.filter { case (n, c) => c == 0 && !mayBeEmpty(n) }
     assert(empty.isEmpty, s"empty results: ${empty.keys.mkString(", ")}")
   }
-
-  test("every query has an oracle") {
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"unexpected rows-only queries: $rowsOnly")
-  }
 }

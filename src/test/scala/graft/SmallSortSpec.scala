@@ -2,20 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-class SmallSortSpec extends GraftSuite {
+import graft.SparkTestBase.withExtensions
 
-  /** A session with the engine's extensions, sharing the test context.
-    * `create()` never replaces a default session that is already set,
-    * and the caller's active session is put back. */
-  private lazy val withRule: SparkSession = {
-    spark // the shared context and default session exist first
-    val active = SparkSession.getActiveSession
-    try SparkSession.builder().withExtensions(new GraftExtensions).create()
-    finally active match {
-      case Some(s) => SparkSession.setActiveSession(s)
-      case None    => SparkSession.clearActiveSession()
-    }
-  }
+class SmallSortSpec extends GraftSuite {
 
   private val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
@@ -25,8 +14,8 @@ class SmallSortSpec extends GraftSuite {
   private def finalPlan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   test("a small global sort reads one partition and runs one job fewer") {
-    val (df, base) = (sorted(withRule), sorted(spark))
-    assert(withRule ne spark)
+    val (df, base) = (sorted(withExtensions), sorted(spark))
+    assert(withExtensions ne spark)
     assert(SparkSession.getDefaultSession.contains(spark))
     val (rows, jobs) = JobsStarted(spark)(df.collect())
     val (rowsBase, jobsBase) = JobsStarted(spark)(base.collect())
@@ -39,18 +28,18 @@ class SmallSortSpec extends GraftSuite {
   }
 
   test("a sort larger than the advisory partition size keeps range partitioning") {
-    withRule.conf.set(advisory, "1k")
+    withExtensions.conf.set(advisory, "1k")
     try {
-      val df = sorted(withRule)
+      val df = sorted(withExtensions)
       val rows = df.collect()
       assert(finalPlan(df).contains("rangepartitioning"), finalPlan(df))
       assert(!finalPlan(df).contains("Exchange SinglePartition"), finalPlan(df))
       assert(rows.toSeq == sorted(spark).collect().toSeq)
-    } finally withRule.conf.unset(advisory)
+    } finally withExtensions.conf.unset(advisory)
   }
 
   test("a sort on an explicit repartitionByRange is left alone") {
-    val df = withRule.range(0, 1000, 1, 4).toDF()
+    val df = withExtensions.range(0, 1000, 1, 4).toDF()
       .repartitionByRange(3, org.apache.spark.sql.functions.col("id")).orderBy("id")
     val rows = df.collect()
     assert(finalPlan(df).contains("rangepartitioning(id"), finalPlan(df))

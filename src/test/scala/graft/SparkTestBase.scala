@@ -15,6 +15,20 @@ object SparkTestBase {
     // is smaller than one call of the larger stream composites needs
     .config("spark.sql.codegen.cache.maxEntries", "5000")
     .getOrCreate()
+
+  /** A session with the engine's extensions, sharing the test context.
+    * `create()` never replaces a default session that is already set,
+    * and the caller's active session is put back, so no spec swaps the
+    * JVM's default session to get the extensions. */
+  lazy val withExtensions: SparkSession = {
+    spark // the shared context and default session exist first
+    val active = SparkSession.getActiveSession
+    try SparkSession.builder().withExtensions(new GraftExtensions).create()
+    finally active match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None    => SparkSession.clearActiveSession()
+    }
+  }
 }
 
 abstract class GraftSuite extends AnyFunSuite {
@@ -62,6 +76,20 @@ object JobsStarted {
       assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus did not deliver the sentinel job in 60 s")
       (result, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** Ids of the RDDs the context holds persisted, which includes every
+  * `localCheckpoint` pin. */
+object Pins {
+  def apply(spark: SparkSession): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Pins beyond `base` once asynchronous unpersists (`Checkpoints.release`
+    * does not block) have had up to 10 s to land. */
+  def leftAfterRelease(spark: SparkSession, base: Set[Int]): Set[Int] = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((apply(spark) -- base).nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    apply(spark) -- base
   }
 }
 

@@ -57,21 +57,9 @@ class TokenCountSpec extends GraftSuite {
   }
 
   test("SQL registration via GraftExtensions") {
-    val base = SparkTestBase.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val r = s2.sql("SELECT bpe_token_count('ab 12 !') m, " +
-        "bpe_token_count(CAST(NULL AS STRING)) n").head
-      assert(r.getInt(0) == 3 && r.isNullAt(1))
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-    }
+    val s2 = SparkTestBase.withExtensions
+    val r = s2.sql("SELECT bpe_token_count('ab 12 !') m, " +
+      "bpe_token_count(CAST(NULL AS STRING)) n").head
+    assert(r.getInt(0) == 3 && r.isNullAt(1))
   }
 }
