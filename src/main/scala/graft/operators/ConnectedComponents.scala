@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge list — the missing step
@@ -9,16 +11,30 @@ import org.apache.spark.sql.functions._
   * pair relation groups docs into clusters, from which one canonical
   * representative survives.
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
-  * is two shuffles (a groupBy-min and a join) over the current edge set;
-  * the edge set converges to a star per component — every node linked
-  * directly to its component's minimum id — in O(log n) rounds. This is
-  * the 100 TB shape: no driver-side graph, no transitive-closure blowup
-  * (closure is O(n·m) rows; stars stay O(n)), each round embarrassingly
-  * parallel. Result at convergence is exactly "min id per component",
-  * independent of iteration order — deterministic, so it can be oracled
-  * against a recursive-CTE twin on small data.
+  * Algorithm: local contraction, then alternating large-star / small-star
+  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC'14) over what is left.
+  *
+  * Contraction (the local-then-global pattern of REPOSE, ICDE 2021): the
+  * canonical edges are hash-partitioned on `src` and each partition runs
+  * a union-find whose root is always the minimum id, then emits one
+  * (root, member) star edge per non-root node. The union of those stars
+  * has exactly the connectivity of the input. When all edges land in one
+  * partition (AQE coalesces small inputs to one) the stars are already
+  * the fixed point and no round runs; otherwise the rounds start from a
+  * much smaller edge set. Per-task memory is bounded: a forest that
+  * reaches [[ForestCap]] nodes emits its stars and a new forest starts,
+  * which weakens the contraction but not the result.
+  *
+  * Rounds: each is two shuffles (a groupBy-min and a join) over the
+  * current edge set; the edge set converges to a star per component —
+  * every node linked directly to its component's minimum id — in
+  * O(log n) rounds. This is the 100 TB shape: no driver-side graph, no
+  * transitive-closure blowup (closure is O(n·m) rows; stars stay O(n)),
+  * each round embarrassingly parallel. Result at convergence is exactly
+  * "min id per component", independent of iteration order and of the
+  * partitioning — deterministic, so it can be oracled against a
+  * recursive-CTE twin on small data.
   *
   * The driver loop is control flow only (one convergence action per
   * round); per-round `localCheckpoint` truncates the join lineage that
@@ -30,6 +46,10 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Most nodes one task's union-find holds before it emits its stars
+    * and starts over: about 20 MB of boxed long ids. */
+  private val ForestCap = 1 << 18
+
   /** (id, component) for every node appearing in `edges`, where
     * `component` is the minimum node id reachable from it. Node ids may
     * be any orderable type (long, string). Self-loops are dropped.
@@ -37,7 +57,7 @@ object ConnectedComponents {
     * halves star depth; 20 covers any graph with diameter < 2^20). */
   def components(edges: DataFrame, srcCol: String = "src",
                  dstCol: String = "dst", maxIter: Int = 20): DataFrame =
-    componentsWithFinal(edges, srcCol, dstCol, maxIter)._1
+    componentsWithFinal(edges, srcCol, dstCol, maxIter).out
 
   /** [[components]] for callers that immediately STAGE the result (the
     * IncrementalStage/DedupStage pattern): the output is materialized
@@ -50,23 +70,26 @@ object ConnectedComponents {
     * Returns a checkpoint root the caller owns and may release. */
   def componentsEager(edges: DataFrame, srcCol: String = "src",
                       dstCol: String = "dst", maxIter: Int = 20): DataFrame = {
-    val (out, fin) = componentsWithFinal(edges, srcCol, dstCol, maxIter)
-    val staged = out.localCheckpoint(true)
-    Checkpoints.release(fin)
+    val run = componentsWithFinal(edges, srcCol, dstCol, maxIter)
+    val staged = run.out.localCheckpoint(true)
+    Checkpoints.release(run.last)
     staged
   }
 
-  /** Core loop: returns (lazy output, the final round's checkpointed
-    * edge frame the output derives from) so eager call sites can
-    * release the latter once the former is materialized. */
-  private[operators] def componentsWithFinal(
+  /** One CC call: the lazy output, the final checkpointed edge frame the
+    * output derives from (eager call sites release it once the output
+    * is materialized), and the number of star rounds that ran. */
+  private[graft] case class Run(out: DataFrame, last: DataFrame, rounds: Int)
+
+  /** Core loop: contraction, then star rounds until [[isMinStar]]. */
+  private[graft] def componentsWithFinal(
       edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", maxIter: Int = 20): (DataFrame, DataFrame) = {
-    var e = edges
+      dstCol: String = "dst", maxIter: Int = 20): Run = {
+    val canonical = edges
       .select(least(col(srcCol), col(dstCol)).as("src"),
         greatest(col(srcCol), col(dstCol)).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(false)
+    var e = contractLocally(canonical).localCheckpoint(false)
     var prev: DataFrame = null
     var converged = isMinStar(e)
     var iter = 0
@@ -104,12 +127,80 @@ object ConnectedComponents {
     val star = e.distinct()
     val out = star.select(col("dst").as("id"), col("src").as("component"))
       .union(star.select(col("src").as("id"), col("src").as("component")).distinct())
-    (out, e)
+    Run(out, e, iter)
   }
 
   /** One row per component: (component, cluster_size). */
   def clusterSizes(comp: DataFrame): DataFrame =
     comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
+
+  /** Star edges (root, member) with the connectivity of the canonical
+    * edge set `e`: hash-partitioned on `src` (AQE coalesces a small
+    * input), then one min-root union-find per partition — at most
+    * [[ForestCap]] nodes at a time — emits an edge from each non-root
+    * node to its root. Ids are handled as Catalyst values of the id
+    * column's type and compared with that type's ordering, the one
+    * Spark's `least` and `min` use, so every id type CC accepts takes
+    * this one path and a single-partition result is already the
+    * min-star fixed point. */
+  private def contractLocally(e: DataFrame): DataFrame = {
+    val schema = e.schema
+    val idType = schema("src").dataType
+    e.repartition(col("src")).mapPartitions { rows =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+      val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+      val forest = new MinRootForest(PhysicalDataType.ordering(idType))
+      def stars(): Iterator[Row] =
+        forest.drain().iterator.map { case (root, member) => Row(toScala(root), toScala(member)) }
+      val full = rows.flatMap { r =>
+        val out = if (forest.size >= ForestCap) stars() else Iterator.empty
+        forest.union(toCatalyst(r.get(0)), toCatalyst(r.get(1)))
+        out
+      }
+      full ++ stars() // by-name: drained after the last row
+    }(Encoders.row(schema))
+  }
+
+  /** Union-find over Catalyst id values whose root is always the
+    * minimum id of its tree (union links the larger root under the
+    * smaller; find halves paths). */
+  private final class MinRootForest(ord: Ordering[Any]) {
+    private val parent = new java.util.HashMap[Any, Any]()
+
+    def size: Int = parent.size
+
+    private def find(x: Any): Any = {
+      var n = x
+      var p = parent.get(n)
+      while (p != n) {
+        val gp = parent.get(p)
+        parent.put(n, gp)
+        n = gp
+        p = parent.get(n)
+      }
+      n
+    }
+
+    def union(a: Any, b: Any): Unit = {
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+
+    /** (root, member) for every non-root node; empties the forest. */
+    def drain(): Array[(Any, Any)] = {
+      val out = Array.newBuilder[(Any, Any)]
+      parent.keySet.forEach { n =>
+        val r = find(n)
+        if (r != n) out += ((r, n))
+      }
+      parent.clear()
+      out.result()
+    }
+  }
 
   /** Large-star: every node connects its strictly-larger neighbors to the
     * minimum of its neighborhood (including itself). One groupBy-min +

@@ -105,9 +105,9 @@ object IncrementalCC {
     // and new ids — bounded by the delta. remap is staged eagerly, so
     // the loop's final internal frame is releasable right away (r17 —
     // the lazy components() result would pin it for the session).
-    val (ccOut, ccFinal) = ConnectedComponents.componentsWithFinal(contracted)
-    val remap = ccOut.localCheckpoint(true)
-    Checkpoints.release(ccFinal)
+    val cc = ConnectedComponents.componentsWithFinal(contracted)
+    val remap = cc.out.localCheckpoint(true)
+    Checkpoints.release(cc.last)
     val updatedExisting = a
       .join(broadcast(remap.select(col("id").as("component"),
         col("component").as("newc"))), Seq("component"), "left")
@@ -234,10 +234,10 @@ object IncrementalCC {
     // the recompute's final internal frame rides in the staging list:
     // the eager wrapper may release it once the result materializes,
     // the lazy form leaves it pinned (the result derives from it)
-    val (recomputed, ccFinal) = ConnectedComponents.componentsWithFinal(induced)
+    val cc = ConnectedComponents.componentsWithFinal(induced)
     val untouched = a.join(broadcast(touched), Seq("component"), "left_anti")
     val out = untouched.select(col("id"), col("component"))
-      .union(recomputed.select(col("id"), col("component")))
-    (out, Seq(del, touched, members, ccFinal))
+      .union(cc.out.select(col("id"), col("component")))
+    (out, Seq(del, touched, members, cc.last))
   }
 }

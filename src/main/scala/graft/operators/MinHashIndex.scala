@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.sinks.{ParquetWrite, ReadBack}
 
@@ -81,8 +81,28 @@ object MinHashIndex {
     schema.add("band", IntegerType)
   }
 
-  private def readLayer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(layerSchema(spark, dir)).parquet(s"$dir/buckets")
+  /** Each dir's bucket rows with their [[layerSchema]], unioned by name.
+    * One read per layer: a single multi-root read trips partition
+    * discovery (CONFLICTING_DIRECTORY_STRUCTURES — each root carries its
+    * own band=N dirs); per-layer reads keep each root's band-partition
+    * pruning intact. */
+  private def readLayers(spark: SparkSession,
+                         layers: Seq[(String, StructType)]): DataFrame =
+    layers.map { case (dir, schema) => spark.read.schema(schema).parquet(s"$dir/buckets") }
+      .reduce(_.unionByName(_))
+
+  /** A layer's id column: its one field besides `band` and `bucket`.
+    * Requiring exactly one makes a future schema addition fail loudly
+    * instead of anti-joining tombstones on the wrong column (review
+    * r18). */
+  private def idField(layer: StructType): StructField = {
+    val ids = layer.fields.filterNot(f => f.name == "band" || f.name == "bucket")
+    require(ids.length == 1,
+      s"bucket schema has ${ids.length} non-band/bucket fields " +
+        s"(${ids.map(_.name).mkString(", ")}); the tombstone filter " +
+        "needs exactly one id column — thread the id through explicitly")
+    ids.head
+  }
 
   /** Bucket rows, repartitioned BY BAND before the write (r14): the
     * signature pass is now a pure projection (no aggregate, no
@@ -101,17 +121,23 @@ object MinHashIndex {
       idCol, nHashes, bands)
       .repartition(col("band"))
 
-  /** Union of the layers' tombstone sets — one `id` column — or None if
-    * no layer has ever retracted. Tombstone files are takedown-sized,
-    * so the union is broadcast-cheap at any corpus scale. */
+  /** Union of the layers' tombstone sets — one `id` column typed like
+    * the layers' id field — or None if no layer has ever retracted.
+    * Tombstone files are takedown-sized, so the union is broadcast-cheap
+    * at any corpus scale. Read through [[ReadBack]] with the layout
+    * [[retract]] writes: no inference job, and a tombstone directory
+    * with another column fails loudly instead of filtering nothing. */
   private def tombstoneUnion(spark: SparkSession,
-                             dirs: Seq[String]): Option[DataFrame] = {
-    val existing = dirs.map(d => new Path(s"$d/tombstones")).filter { p =>
+                             layers: Seq[(String, StructType)]): Option[DataFrame] = {
+    val existing = layers.filter { case (d, _) =>
+      val p = new Path(s"$d/tombstones")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
     if (existing.isEmpty) None
-    else Some(existing.map(p => spark.read.parquet(p.toString))
-      .reduce(_.unionByName(_)).distinct())
+    else Some(existing.map { case (d, schema) =>
+      ReadBack.parquet(spark, s"$d/tombstones",
+        StructType(Seq(idField(schema).copy(name = "id"))))
+    }.reduce(_.unionByName(_)).distinct())
   }
 
   /** Retract docs from the index — the takedown path (r18, VERDICT r17
@@ -132,9 +158,10 @@ object MinHashIndex {
   def retract(spark: SparkSession, dir: String, ids: DataFrame,
               idCol: String): Unit = {
     // same loud-failure discipline as append: retracting against a
-    // pre-r14 layer would "succeed" while probes keep missing pairs
-    layerSchema(spark, dir)
-    ParquetWrite(ids.select(col(idCol).as("id")).distinct()
+    // pre-r14 layer would "succeed" while probes keep missing pairs.
+    // Ids are written as the layer's id type, the type probes read.
+    val id = idField(layerSchema(spark, dir))
+    ParquetWrite(ids.select(col(idCol).cast(id.dataType).as("id")).distinct()
       .coalesce(1)
       .write.mode("append"), s"$dir/tombstones")
   }
@@ -191,17 +218,14 @@ object MinHashIndex {
   def probeNewMulti(spark: SparkSession, dirs: Seq[String], corpus: DataFrame,
                idCol: String, textNorm: Column, threshold: Double,
                minNewId: Long, maxBucket: Int = 64): DataFrame = {
-    // One read per layer, unioned: a single multi-root read trips
-    // partition discovery (CONFLICTING_DIRECTORY_STRUCTURES — each root
-    // carries its own band=N dirs); per-layer reads keep each root's
-    // band-partition pruning intact and the union is by name.
-    val live = dirs.map(readLayer(spark, _)).reduce(_.unionByName(_))
+    val layers = dirs.map(d => d -> layerSchema(spark, d))
+    val live = readLayers(spark, layers)
     // Tombstoned docs are filtered BEFORE the bucket-width/representative
     // aggregation: a retracted doc may neither pair nor hold a bucket's
     // min-id representative slot nor count toward the mega-bucket cap —
     // the filtered index must behave exactly like one built without the
     // retracted docs (spec-asserted probe equivalence).
-    val staged = tombstoneUnion(spark, dirs) match {
+    val staged = tombstoneUnion(spark, layers) match {
       case Some(t) =>
         live.join(broadcast(t.withColumnRenamed("id", idCol)),
           Seq(idCol), "left_anti")
@@ -270,24 +294,18 @@ object MinHashIndex {
   def compact(spark: SparkSession, baseDir: String,
               overlayDirs: Seq[String]): Unit = {
     val dirs = baseDir +: overlayDirs
-    val raw = dirs.map(readLayer(spark, _)).reduce(_.unionByName(_))
+    val layers = dirs.map(d => d -> layerSchema(spark, d))
+    val raw = readLayers(spark, layers)
     // Purge tombstoned rows physically during the rewrite ([[retract]]'s
     // deferred half): the compacted base then needs no tombstone filter,
     // and the tombstone files are cleared after the swap — a crash in
     // between leaves stale tombstones whose rows are already gone, which
     // the probe-time anti-join treats as a no-op (still correct).
-    val union = tombstoneUnion(spark, dirs) match {
+    val union = tombstoneUnion(spark, layers) match {
       case Some(t) =>
-        // the id column is THE field that is not band/bucket — require
-        // exactly one so a future schema addition fails loudly here
-        // instead of silently anti-joining on the wrong column and then
-        // deleting the tombstones it failed to apply (review r18)
-        val idFields = raw.schema.fieldNames.filterNot(Set("band", "bucket"))
-        require(idFields.length == 1,
-          s"bucket schema has ${idFields.length} non-band/bucket fields " +
-            s"(${idFields.mkString(", ")}); compact's tombstone purge " +
-            "needs exactly one id column — thread the id through explicitly")
-        val idName = idFields.head
+        // anti-joining on the wrong column would then delete the
+        // tombstones it failed to apply; idField fails loudly instead
+        val idName = idField(raw.schema).name
         raw.join(broadcast(t.withColumnRenamed("id", idName)),
           Seq(idName), "left_anti")
       case None => raw

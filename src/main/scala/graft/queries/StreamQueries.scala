@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -31,6 +32,13 @@ object StreamQueries {
     * entry point is `readStream` over files/queues — MemoryStream is the
     * deterministic test harness the correctness gate needs. */
   val StreamRowCap: Int = 10000
+
+  /** State encoder of the `Map[Long, Long]` sketch streams
+    * (q_stream_topk, q_stream_quantiles), built once. A map encoder
+    * numbers its lambda variables from a JVM-wide counter when it is
+    * built, and the numbers land in the generated (de)serializers, so
+    * one built per call compiled them again on every call. */
+  private val LongCountsState: Encoder[Map[Long, Long]] = ExpressionEncoder[Map[Long, Long]]()
 
   /** Per-(session, dir) memo for the harness's bounded input slices.
     * Each query's deterministic micro-batch input is a pure function of
@@ -839,7 +847,8 @@ GROUP BY event_type ORDER BY event_type
       val in = MemoryStream[(Long, Long)]
       val q = in.toDS()
         .groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)(
+          LongCountsState, implicitly[Encoder[(Long, Long, Long)]])
         .toDF("grp", "hk", "est")
         .writeStream.format("memory").queryName("q_stream_topk_out")
         .outputMode("append").start()
@@ -996,7 +1005,8 @@ ORDER BY user_id, start_us
       val in = MemoryStream[(String, Long)]
       val q = in.toDS()
         .groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)(
+          LongCountsState, implicitly[Encoder[(String, String, Long, Long, Long)]])
         .toDF("grp", "q", "bucket_lo", "bucket_hi", "n")
         .writeStream.format("memory").queryName("q_stream_quant_out")
         .outputMode("append").start()

@@ -219,4 +219,25 @@ class MinHashIndexSpec extends GraftSuite {
     assert(ok.columns.toSeq == Seq("id_a", "id_b", "jaccard"))
     MinHashIndex.append(docs.filter(col("doc_id") >= 150), "doc_id", norm, good)
   }
+
+  test("tombstones of another column name or type fail loudly on probe and compact") {
+    val docs = Tables(spark, sf, "documents")
+    val norm = normalizeText(col("text"))
+    // retract writes `id` typed like the layer's id field; a directory
+    // read with that schema but holding another column would read as
+    // all-NULL ids and retract nothing
+    Seq("name" -> col("doc_id").cast("long").as("doc_id"),
+        "type" -> col("doc_id").cast("string").as("id")).foreach { case (kind, id) =>
+      val dir = s"target/lsh_index_spec_tombstone_$kind"
+      MinHashIndex.build(docs.filter(col("doc_id") < 150), "doc_id", norm, dir)
+      docs.filter(col("doc_id") < 3).select(id)
+        .write.mode("overwrite").parquet(s"$dir/tombstones")
+      val eProbe = intercept[IllegalArgumentException] {
+        MinHashIndex.probeNew(spark, dir, docs, "doc_id", norm, threshold = 0.7, minNewId = 0L)
+      }
+      assert(eProbe.getMessage.contains(s"$dir/tombstones"), s"$kind: ${eProbe.getMessage}")
+      val eCompact = intercept[IllegalArgumentException](MinHashIndex.compact(spark, dir, Seq.empty))
+      assert(eCompact.getMessage.contains("expected [id bigint]"), s"$kind: ${eCompact.getMessage}")
+    }
+  }
 }

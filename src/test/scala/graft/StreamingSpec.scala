@@ -425,9 +425,10 @@ class StreamingSpec extends GraftSuite {
     // Spark numbers a map encoder's lambda variables from a JVM-wide
     // counter, when the encoder is built and again when the analyzer
     // resolves its deserializer, and the numbers land in the generated
-    // code: the Map[Long, Long] state of these two streams compiles its
-    // (de)serializers again on every call.
-    val recompiles = Map("q_stream_quantiles" -> 3, "q_stream_topk" -> 3)
+    // code. The Map[Long, Long] state encoder of these two streams is
+    // built once, so only the analyzer's numbering is new on each call:
+    // two classes still compile again.
+    val recompiles = Map("q_stream_quantiles" -> 2, "q_stream_topk" -> 2)
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt >= 1000,
       "a codegen cache smaller than one call's classes evicts them, so every call recompiles")
     def call(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
