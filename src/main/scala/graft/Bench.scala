@@ -144,28 +144,25 @@ object Bench {
     val offsJson = results.map { case (k, _, _, off) => jkey(k) + ":" + fmt(off) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // Build/probe split: staged-index queries (StagedOnce / DedupStage)
-    // pay their build inside the FIRST timed invocation, so the min-of-3
+    // Build/probe split: staged-index queries (StagedOnce) pay their
+    // build inside the FIRST timed invocation, so the min-of-3
     // per-query number is probe-side. Report the build seconds for the
     // measured sfDir explicitly so the bench can't be read as hiding
     // build cost — at 100 TB these builds amortize over batches (the
     // operators' documented contract), but the cost must be visible.
     // Owners and source dirs come from the staging sites themselves
-    // (StagedOnce's `owner`/`dir` params / DedupStage.Owner) — nothing
-    // re-derives key strings here, so a renamed index dir can't
-    // silently empty the report and the warmup dir's builds (whose
-    // lossy key tag can suffix-collide with the measured dir's) can
-    // never be attributed to the measured dir.
+    // (StagedOnce's `owner`/`dir` params) — nothing re-derives key
+    // strings here, so a renamed index dir can't silently empty the
+    // report and the warmup dir's builds (whose lossy key tag can
+    // suffix-collide with the measured dir's) can never be attributed
+    // to the measured dir.
     // Aggregated (summed) per owner: several artifacts sharing an owner
     // (or a raw-key fallback colliding with an owner) must fold into one
     // JSON entry — duplicate keys silently drop data in most parsers.
-    val builds =
-      (graft.operators.StagedOnce.builds(spark).toSeq.collect {
-        case (k, (owner, d, sec)) if d == sfDir =>
-          (if (owner.nonEmpty) owner else k) -> sec
-      } ++ graft.operators.DedupStage.buildSeconds(spark).toSeq.collect {
-        case (k, v) if k == sfDir => graft.operators.DedupStage.Owner -> v
-      }).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+    val builds = graft.operators.StagedOnce.builds(spark).toSeq.collect {
+      case (k, (owner, d, sec)) if d == sfDir =>
+        (if (owner.nonEmpty) owner else k) -> sec
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
     val bs = builds.map { case (k, v) => jkey(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val sfJson = jkey(sfDir) // same escaping as keys: sfDir is user input

@@ -6,8 +6,8 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped build-once memo — the shared backing for [[Tables]],
-  * [[graft.operators.StagedOnce]] and [[graft.operators.DedupStage]].
+/** Session-scoped build-once memo — the backing of the [[Tables]] load
+  * memo and of [[graft.operators.StagedOnce]], the staging ledger.
   *
   * Keyed on the owning `SparkSession` so memoized frames never leak
   * across sessions, and EVICTED when the session's SparkContext ends:
@@ -29,26 +29,33 @@ import org.apache.spark.sql.SparkSession
   * Bench do so in teardown. Bounded either way: entries are
   * per-(session, dir) singletons, not per-call.
   *
-  * Thread-safe: `computeIfAbsent` blocks concurrent builders of the
-  * same key, so a build runs exactly once per (session, key).
+  * Thread-safe: the map holds one cell per key, and the first caller
+  * builds it under the cell's own lock, outside the map, so a build
+  * runs exactly once per (session, key), a build may itself memoize
+  * other keys (the map forbids updating itself from inside
+  * `computeIfAbsent`), and a slow build blocks only callers of its own
+  * key. A build that throws leaves no entry: the next call builds again.
   */
 final class SessionMemo[K, V] {
 
-  private val memo = new ConcurrentHashMap[(SparkSession, K), V]()
+  private val memo = new ConcurrentHashMap[(SparkSession, K), SessionMemo.Cell[V]]()
 
   SessionMemo.instances.add(this)
 
   def apply(s: SparkSession, key: K)(build: => V): V = {
     SessionMemo.registerEviction(s.sparkContext, this)
-    memo.computeIfAbsent((s, key), _ => build)
+    val k = (s, key)
+    val cell = memo.computeIfAbsent(k, _ => new SessionMemo.Cell[V])
+    try cell.getOrBuild(build)
+    catch { case e: Throwable => memo.remove(k, cell); throw e }
   }
 
-  /** Snapshot of this session's entries (other sessions' keys are
-    * invisible). Lets callers report on what was staged — e.g. the
-    * bench's build/probe split — without re-triggering builds. */
+  /** Snapshot of this session's built entries (other sessions' keys and
+    * builds still running are invisible). Lets callers report on what
+    * was staged without re-triggering builds. */
   private[graft] def entries(s: SparkSession): Map[K, V] = {
     val out = Map.newBuilder[K, V]
-    memo.forEach { (k, v) => if (k._1 eq s) out += k._2 -> v }
+    memo.forEach { (k, c) => if (k._1 eq s) c.value.foreach(v => out += k._2 -> v) }
     out.result()
   }
 
@@ -72,9 +79,18 @@ final class SessionMemo[K, V] {
 
 object SessionMemo {
 
+  /** One key's value, built at most once by the first caller; other
+    * callers of the same key wait on the cell, not on the map. */
+  private final class Cell[V] {
+    @volatile var value: Option[V] = None
+    def getOrBuild(build: => V): V = synchronized {
+      value.getOrElse { val v = build; value = Some(v); v }
+    }
+  }
+
   // Weak registry of every live memo instance so evictSession can reach
-  // all of them (Tables, StagedOnce, DedupStage, per-query memos) without
-  // each declaring itself; weak so short-lived test instances don't pin.
+  // all of them without each declaring itself; weak so short-lived test
+  // instances don't pin.
   private val instances: java.util.Set[SessionMemo[_, _]] =
     java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(

@@ -61,26 +61,21 @@ object Tables {
     * Local stand-in for what a production deployment makes a persisted
     * staged table (compacted/bucketed/column-pruned parquet written
     * once, scanned many times); at 100 TB the staging IS that write,
-    * and the compaction guard is already a no-op there. Build cost
-    * stays visible: the checkpoint is timed through
+    * and the compaction guard is already a no-op there. Staged through
     * [[graft.operators.StagedOnce]] (owner `tables_staged`), so the
-    * bench's build_s line reports it instead of folding it into
-    * whichever query staged first. */
-  private val stagedMemo = new SessionMemo[(String, String, Seq[String]), DataFrame]()
-
+    * bench's build_s line reports the checkpoint instead of folding it
+    * into whichever query staged first. */
   def staged(spark: SparkSession, dir: String, name: String,
              cols: Seq[String] = Nil): DataFrame = {
-    // Canonical (sorted) column order inside the memo so callers naming
+    // Canonical (sorted) column order in the key so callers naming
     // the same column SET share one artifact; re-projected to the
     // caller's order on the way out — positional consumers (`.as[T]`,
     // `.toDF`) must see the order they asked for.
     val key = cols.sorted
-    val canonical = stagedMemo(spark, (dir, name, key)) {
-      graft.operators.StagedOnce.timedBuild(spark,
+    val canonical = graft.operators.StagedOnce(spark,
         s"tables_staged:$name(${key.mkString(",")})@$dir",
         owner = "tables_staged", dir = dir) {
-        project(apply(spark, dir, name), key).localCheckpoint(true)
-      }
+      project(apply(spark, dir, name), key).localCheckpoint(true)
     }
     project(canonical, cols)
   }

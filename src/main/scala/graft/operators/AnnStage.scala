@@ -26,8 +26,7 @@ import graft.functions.VectorFns.{cosineFast, toDoubleVec}
   *    table after a delta [[IvfIndex.append]], which at 100 TB is a
   *    persisted table, not a per-query recompute.
   *
-  * Build seconds land in [[StagedOnce]]'s report under the owning
-  * query, so the bench keeps the build/probe split visible.
+  * Both are staged through [[StagedOnce]] under the owning query.
   */
 object AnnStage {
 
@@ -37,9 +36,6 @@ object AnnStage {
   /** Base-era snapshot boundary: vectors below it were present at index
     * build time, vectors at/above it arrive as delta appends. */
   val BaseSplit = 400
-
-  private val sweep = new graft.SessionMemo[String, (DataFrame, DataFrame)]()
-  private val drift = new graft.SessionMemo[String, (DataFrame, DataFrame)]()
 
   /** (vec_id, label, e) over the embeddings table. */
   def corpus(s: SparkSession, dir: String): DataFrame =
@@ -56,14 +52,12 @@ object AnnStage {
     * denominator both audits share; the centroids are q_ann_sweep's
     * probe geometry and q_ann_drift_recall's "rebuilt" era. */
   def centsAndBrute(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    sweep(s, dir) {
-      StagedOnce.timedBuild(s, s"annstage|$dir", SweepOwner, dir) {
-        val e = corpus(s, dir)
-        val cents = Knn.centroids(e, "label").localCheckpoint(true)
-        val brute = Knn.bruteForceTopK(queries(s, dir), e.select("vec_id", "e"), 10)
-          .select("qid", "vec_id").localCheckpoint(true)
-        (cents, brute)
-      }
+    StagedOnce(s, s"annstage|$dir", SweepOwner, dir) {
+      val e = corpus(s, dir)
+      val cents = Knn.centroids(e, "label").localCheckpoint(true)
+      val brute = Knn.bruteForceTopK(queries(s, dir), e.select("vec_id", "e"), 10)
+        .select("qid", "vec_id").localCheckpoint(true)
+      (cents, brute)
     }
 
   /** ((cid, cv) base-snapshot centroids, (vec_id, cid, e) drift-era
@@ -74,24 +68,22 @@ object AnnStage {
     * does to the staged assignment table. Staged once per
     * (session, dir). */
   def driftState(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    drift(s, dir) {
-      StagedOnce.timedBuild(s, s"anndrift|$dir", DriftOwner, dir) {
-        val e = corpus(s, dir)
-        val base = e.filter(col("vec_id") < BaseSplit)
-        val cb = Knn.centroids(base, "label")
-          .select(col("label").as("cid"), col("cv")).localCheckpoint(true)
-        val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid"))
-        val deltaCid = e.filter(col("vec_id") >= BaseSplit)
-          .crossJoin(broadcast(cb))
-          .withColumn("csim", cosineFast(col("e"), col("cv")))
-          .withColumn("crank", row_number().over(w))
-          .filter(col("crank") === 1)
-          .select(col("vec_id"), col("cid"), col("e"))
-        val clustered = base
-          .select(col("vec_id"), col("label").as("cid"), col("e"))
-          .union(deltaCid)
-          .localCheckpoint(true)
-        (cb, clustered)
-      }
+    StagedOnce(s, s"anndrift|$dir", DriftOwner, dir) {
+      val e = corpus(s, dir)
+      val base = e.filter(col("vec_id") < BaseSplit)
+      val cb = Knn.centroids(base, "label")
+        .select(col("label").as("cid"), col("cv")).localCheckpoint(true)
+      val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid"))
+      val deltaCid = e.filter(col("vec_id") >= BaseSplit)
+        .crossJoin(broadcast(cb))
+        .withColumn("csim", cosineFast(col("e"), col("cv")))
+        .withColumn("crank", row_number().over(w))
+        .filter(col("crank") === 1)
+        .select(col("vec_id"), col("cid"), col("e"))
+      val clustered = base
+        .select(col("vec_id"), col("label").as("cid"), col("e"))
+        .union(deltaCid)
+        .localCheckpoint(true)
+      (cb, clustered)
     }
 }

@@ -15,23 +15,16 @@ import graft.functions.TextFns.normalizeText
   * by earlier batches. Rebuilding them on every invocation billed the
   * base build to every fold measurement (bench = warmup + 3 timed runs
   * = four base builds), drowning the thing the queries exist to
-  * measure. Staged once per (session, dir) and memoized as eager
-  * checkpoints; build seconds land in [[StagedOnce]]'s report so the
-  * bench prints the build/probe split instead of folding the amortized
-  * build into whichever invocation ran first. At 100 TB both frames
-  * are persisted tables owned by the index/cluster-maintenance job;
-  * the memo models that read-amortization exactly (DedupStage's
-  * contract, verbatim).
+  * measure. Staged once per (session, dir) as eager checkpoints through
+  * [[StagedOnce]]. At 100 TB both frames are persisted tables owned by
+  * the index/cluster-maintenance job; the staging models that
+  * read-amortization exactly (DedupStage's contract, verbatim).
   */
 object IncrementalStage {
 
   val CcOwner = "q_incremental_cc"
   val DedupOwner = "q_incremental_dedup"
   val DecOwner = "q_decremental_cc"
-
-  private val cc = new graft.SessionMemo[String, DataFrame]()
-  private val dedup = new graft.SessionMemo[String, (DataFrame, DataFrame)]()
-  private val dec = new graft.SessionMemo[String, DataFrame]()
 
   private def allEdges(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem")
@@ -42,12 +35,10 @@ object IncrementalStage {
   /** Base-era (id, component) for q_incremental_cc: components over the
     * non-7th-line-item edges. Staged once per (session, dir). */
   def ccBaseAssign(s: SparkSession, dir: String): DataFrame =
-    cc(s, dir) {
-      StagedOnce.timedBuild(s, s"iccbase|$dir", CcOwner, dir) {
-        ConnectedComponents.componentsEager(
-          allEdges(s, dir).filter(col("l_linenumber") % 7 =!= 0)
-            .select("src", "dst"))
-      }
+    StagedOnce(s, s"iccbase|$dir", CcOwner, dir) {
+      ConnectedComponents.componentsEager(
+        allEdges(s, dir).filter(col("l_linenumber") % 7 =!= 0)
+          .select("src", "dst"))
     }
 
   /** The delta-era edges (7th line items) — one cheap bounded scan,
@@ -96,10 +87,8 @@ object IncrementalStage {
     * edge set — the state a production pipeline has on disk before the
     * takedown batch arrives. Staged once per (session, dir). */
   def decBaseAssign(s: SparkSession, dir: String): DataFrame =
-    dec(s, dir) {
-      StagedOnce.timedBuild(s, s"decbase|$dir", DecOwner, dir) {
-        ConnectedComponents.componentsEager(decAllEdges(s, dir))
-      }
+    StagedOnce(s, s"decbase|$dir", DecOwner, dir) {
+      ConnectedComponents.componentsEager(decAllEdges(s, dir))
     }
 
   /** (all near-dup pairs, base-era assignment) for q_incremental_dedup:
@@ -108,31 +97,25 @@ object IncrementalStage {
     * (session, dir); the caller slices the delta era from the staged
     * pair frame. */
   def dedupBase(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    dedup(s, dir) {
-      StagedOnce.timedBuild(s, s"idedupbase|$dir", DedupOwner, dir) {
-        val pairs = MinHashDedup.nearDuplicates(
-            Tables(s, dir, "documents"), "doc_id",
-            normalizeText(col("text")), threshold = 0.7)
-          .select(col("id_a").as("src"), col("id_b").as("dst"))
-          .localCheckpoint(true)
-        val assign = ConnectedComponents
-          .componentsEager(pairs.filter(col("dst") < 400))
-        (pairs, assign)
-      }
+    StagedOnce(s, s"idedupbase|$dir", DedupOwner, dir) {
+      val pairs = MinHashDedup.nearDuplicates(
+          Tables(s, dir, "documents"), "doc_id",
+          normalizeText(col("text")), threshold = 0.7)
+        .select(col("id_a").as("src"), col("id_b").as("dst"))
+        .localCheckpoint(true)
+      val assign = ConnectedComponents
+        .componentsEager(pairs.filter(col("dst") < 400))
+      (pairs, assign)
     }
 
   val RetractOwner = "q_dedup_retraction"
-
-  private val dedupFull = new graft.SessionMemo[String, DataFrame]()
 
   /** The LIVE dedup-cluster assignment — components over the corpus's
     * full MinHash pair set (shares [[dedupBase]]'s staged pair frame) —
     * the state q_dedup_retraction applies document takedowns to.
     * Staged once per (session, dir). */
   def dedupFullAssign(s: SparkSession, dir: String): DataFrame =
-    dedupFull(s, dir) {
-      StagedOnce.timedBuild(s, s"idedupfull|$dir", RetractOwner, dir) {
-        ConnectedComponents.componentsEager(dedupBase(s, dir)._1)
-      }
+    StagedOnce(s, s"idedupfull|$dir", RetractOwner, dir) {
+      ConnectedComponents.componentsEager(dedupBase(s, dir)._1)
     }
 }

@@ -33,11 +33,6 @@ object LlmQueries12 {
   private def grams(s: SparkSession, dir: String): DataFrame =
     gramsOf(t(s, dir, "documents"))
 
-  /** q_bloom_decontaminate's bench-side stage: (filter bytes,
-    * checkpointed distinct bench gram set). */
-  private val benchStage =
-    new graft.SessionMemo[String, (Array[Byte], DataFrame)]()
-
   /** Bloom-gated benchmark decontamination: build a Bloom filter over
     * the held-out benchmark's 3-gram hashes (distributed partial build,
     * one merged ~1 MB filter), probe every training gram through the
@@ -64,7 +59,8 @@ object LlmQueries12 {
     // training-side probe — StagedOnce's build-amortization contract,
     // held in-JVM because both artifacts are tiny. The training grams
     // intentionally stay a stream (that side is the 100 TB one).
-    val (filterBytes, bench) = benchStage(s, dir) {
+    val (filterBytes, bench) = graft.operators.StagedOnce(s, s"bloom_bench@$dir",
+        owner = "q_bloom_decontaminate", dir = dir) {
       val b = grams(s, dir).filter(col("doc_id") % 89 === 0)
         .select("ng").distinct().localCheckpoint(true)
       val bloom = b.stat.bloomFilter("ng", 1L << 20, 0.01)

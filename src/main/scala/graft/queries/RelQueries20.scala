@@ -25,8 +25,6 @@ object RelQueries20 {
     * bench's build_s report keys its builds under this name. */
   val SessionsOwner = "q_interval_join+q_peak_concurrency+q_overlap_counts"
 
-  private val sessMemo = new graft.SessionMemo[String, DataFrame]()
-
   /** Session intervals: the q_sessionize 30-min-gap island logic,
     * reduced to one [s, e] row per (user, session). One shuffle on
     * user_id; all windows partitioned.
@@ -38,25 +36,22 @@ object RelQueries20 {
     * Eagerly checkpointed (the frame is one bounded row per session,
     * tiny relative to events); build seconds land in the bench's
     * build_s line under [[SessionsOwner]]. At 100 TB this is a
-    * persisted session table maintained incrementally — the memo models
-    * that read-amortization. */
+    * persisted session table maintained incrementally — the staging
+    * models that read-amortization. */
   private def sessions(s: SparkSession, dir: String): DataFrame =
-    sessMemo(s, dir) {
-      StagedOnce.timedBuild(s, s"session_intervals@$dir",
-          owner = SessionsOwner, dir = dir) {
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        val gapUs = 30L * 60 * 1000000
-        t(s, dir, "events")
-          .withColumn("us", unix_micros(col("ts")))
-          .withColumn("new_session",
-            when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1)
-              .when(lag(col("us"), 1).over(w).isNull, 1).otherwise(0))
-          .withColumn("session_idx",
-            sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy(col("user_id"), col("session_idx").cast("long").as("session_idx"))
-          .agg(min(col("us")).as("s"), max(col("us")).as("e"))
-          .localCheckpoint(true)
-      }
+    StagedOnce(s, s"session_intervals@$dir", owner = SessionsOwner, dir = dir) {
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      val gapUs = 30L * 60 * 1000000
+      t(s, dir, "events")
+        .withColumn("us", unix_micros(col("ts")))
+        .withColumn("new_session",
+          when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1)
+            .when(lag(col("us"), 1).over(w).isNull, 1).otherwise(0))
+        .withColumn("session_idx",
+          sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("user_id"), col("session_idx").cast("long").as("session_idx"))
+        .agg(min(col("us")).as("s"), max(col("us")).as("e"))
+        .localCheckpoint(true)
     }
 
   /** Interval-overlap self-join: for each session, the number of

@@ -40,25 +40,20 @@ object StreamQueries {
     * one built per call compiled them again on every call. */
   private val LongCountsState: Encoder[Map[Long, Long]] = ExpressionEncoder[Map[Long, Long]]()
 
-  /** Per-(session, dir) memo for the harness's bounded input slices.
+  /** Per-(session, dir) staging of the harness's bounded input slices.
     * Each query's deterministic micro-batch input is a pure function of
     * the testdata dir (predicate/order/limit-bounded, ≤ StreamRowCap
     * rows), yet was re-collected — a full scan+sort job — on every
     * invocation. That collect is harness PREP, not the streaming
     * computation under test, so it follows the staged-artifact
-    * contract: built once per (session, dir), timed through
+    * contract: built once per (session, dir) through
     * [[graft.operators.StagedOnce]] (owner = the query) so the bench's
     * build_s line keeps the cost visible. Values are driver arrays
     * bounded by StreamRowCap — cents of heap, evicted with the
     * session. */
-  private val sliceMemo = new graft.SessionMemo[(String, String), AnyRef]()
-
-  private[queries] def slice[T <: AnyRef](s: SparkSession, dir: String,
+  private[queries] def slice[T](s: SparkSession, dir: String,
       key: String)(build: => T): T =
-    sliceMemo(s, (dir, key)) {
-      graft.operators.StagedOnce.timedBuild(s, s"stream_slice:$key@$dir",
-        owner = key, dir = dir)(build)
-    }.asInstanceOf[T]
+    graft.operators.StagedOnce(s, s"stream_slice:$key@$dir", owner = key, dir = dir)(build)
 
   def streamingMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -294,4 +294,23 @@ class PlanGovernanceSpec extends GraftSuite {
     }
     assert(bypasses.isEmpty, s"parquet writes that bypass sinks.ParquetWrite: ${bypasses.mkString(", ")}")
   }
+
+  test("SessionMemo is constructed only by the Tables load memo and StagedOnce") {
+    // Staged artifacts go through StagedOnce, the one build ledger the
+    // bench reads; a private memo elsewhere stages outside it (its
+    // build_s disappears) or beside it (the build is memoized twice).
+    import scala.jdk.CollectionConverters._
+    val ctor = "new\\s+(?:graft\\.)?SessionMemo\\s*[\\[(]".r
+    assert(ctor.findFirstIn("private val m = new graft.SessionMemo[String, Int]()").nonEmpty)
+    assert(ctor.findFirstIn("new SessionMemo[(String, String), DataFrame]()").nonEmpty)
+    assert(ctor.findFirstIn("SessionMemo.evictSession(s)").isEmpty)
+    assert(ctor.findFirstIn("new SessionMemo.Cell[V]").isEmpty)
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    val sources = java.nio.file.Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+    assert(sources.size > 100, s"found ${sources.size} sources under ${root.toAbsolutePath}")
+    val owners = sources.filter(p => ctor.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+      .map(p => root.relativize(p).toString).sorted
+    assert(owners === Seq("graft/Tables.scala", "graft/operators/StagedOnce.scala"))
+  }
 }
